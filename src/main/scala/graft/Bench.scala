@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -34,10 +35,10 @@ object Bench {
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       queries.foreach { case (_, fn) =>
-        try { fn(spark, warmDir).count() } catch { case _: Throwable => () }
+        try { fn(spark, warmDir).count() } catch { case NonFatal(_) => () }
       }
     }
-    try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
+    try SparkEntry.entry(spark).count() catch { case NonFatal(_) => () }
     // Median-of-N timed passes (default 5) over SUCCESSFUL runs: host
     // co-tenant load spikes (observed 5x inflation, and a 20% r3→r4
     // total swing with ZERO code change under min-of-2) would otherwise
@@ -65,7 +66,7 @@ object Bench {
         if (heapProbe) { System.gc(); heapPools.foreach(_.resetPeakUsage()) }
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
-          catch { case _: Throwable => false }
+          catch { case NonFatal(_) => false }
         val dt = (System.nanoTime() - t0) / 1e9
         if (heapProbe) {
           val mb = heapPools.map(_.getPeakUsage.getUsed).sum / 1e6
@@ -170,7 +171,7 @@ object Bench {
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case _: Throwable => () } // read-only fs must not kill the bench
+    } catch { case NonFatal(_) => () } // read-only fs must not kill the bench
     // Contract line: keep it short (< ~1.2 KB) so it fits entirely inside the
     // driver's tail window even with sbt's trailing "[success]" line after it.
     // `value` is the TOTAL across all SUCCESSFUL queries (failed ones are

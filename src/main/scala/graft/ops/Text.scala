@@ -1,5 +1,6 @@
 package graft.ops
 
+import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -869,26 +870,27 @@ object Text {
 
   // ───────────────────────── trained BPE ─────────────────────────
 
-  /** Merge rounds trained by [[bpeMergeFrames]] — the vocabulary-size
+  /** Merge rounds trained by [[bpeMerges]] — the vocabulary-size
     * knob of byte-pair encoding (|merges| = |vocab| − |chars|).
     *
-    * PINNED ≤ [[BpeRoundsMax]] (enforced in [[bpeMergeFrames]]): the
-    * replace-chain segmenter applies ONE broadcast-crossJoin + string
-    * replace per trained merge, so segmentation plan size and corpus
-    * passes are LINEAR in the merge count — fine at dozens of rounds,
-    * a plan-size wall at the 30k–50k merges a production tokenizer
-    * trains (round-15 verdict, What's-wrong #1). The door past the
-    * wall EXISTS since round 17: [[bpePiecesLM]] segments by greedy
-    * longest-match over the trained vocabulary — one broadcast array,
-    * one corpus pass, plan size independent of the merge count —
-    * spec-proven piece-identical to the chain at the declared rounds
-    * and sharing its oracle (q_text_bpe_lm). The pin therefore now
-    * bounds only the two REPLACE-CHAIN consumers (the in-engine
-    * [[bpePieces]] witness and the DuckDB [[sqlBpeCtes]] restatement,
-    * both inherently per-merge); a 30k-merge deployment segments via
-    * the LM path and simply has no cross-engine per-merge oracle —
-    * the LM segmenter itself stays testable against held-out
-    * segmentations. */
+    * PINNED ≤ [[BpeRoundsMax]] (enforced in [[bpeMerges]]): the
+    * replace-chain segmenter applies ONE string replace per trained
+    * merge, so its expression depth and the DuckDB oracle's CTE chain
+    * are LINEAR in the merge count — fine at dozens of rounds, a
+    * plan-size wall at the 30k–50k merges a production tokenizer
+    * trains (round-15 verdict, What's-wrong #1). Training itself has
+    * no such wall: it is one driver-side fold ([[bpeTrain]]) over the
+    * distinct-word table. The door past the segmentation wall EXISTS
+    * since round 17: [[bpePiecesLM]] segments by greedy longest-match
+    * over the trained vocabulary — one literal array, one corpus
+    * pass, plan size independent of the merge count — spec-proven
+    * piece-identical to the chain at the declared rounds and sharing
+    * its oracle (q_text_bpe_lm). The pin therefore bounds only the two
+    * REPLACE-CHAIN consumers (the in-engine [[bpePieces]] witness and
+    * the DuckDB [[sqlBpeCtes]] restatement, both inherently
+    * per-merge); a 30k-merge deployment segments via the LM path and
+    * simply has no cross-engine per-merge oracle — the LM segmenter
+    * itself stays testable against held-out segmentations. */
   private[graft] val BpeRounds = 8
 
   /** Ceiling on [[BpeRounds]] — bounds the per-merge REPLACE-CHAIN
@@ -900,133 +902,133 @@ object Text {
     * word is held as `␁s₁␁␁s₂␁…␁sₖ␁` (every symbol wrapped in ␁),
     * so the pair (a,b) is the SUBSTRING `␁a␁␁b␁` and one
     * `replace(w, "␁a␁␁b␁", "␁ab␁")` call IS the greedy left-to-right
-    * non-overlapping merge — identical semantics in Spark and DuckDB,
-    * no per-word loop in either engine, and the wrapper makes a
-    * cross-symbol false match impossible (a symbol's first char is
-    * always preceded by ␁␁ or the word start). ␁ never occurs in
-    * fixture tokens; a corpus that could carry it would hash-fold
-    * tokens first. */
+    * non-overlapping merge — identical semantics in Spark, DuckDB and
+    * `String.replace`, no per-word loop in any of them, and the
+    * wrapper makes a cross-symbol false match impossible (a symbol's
+    * first char is always preceded by ␁␁ or the word start). ␁ never
+    * occurs in fixture tokens; a corpus that could carry it would
+    * hash-fold tokens first. */
   private val BpeSep = "\u0001"
+  private val BpeSS = BpeSep + BpeSep
 
-  /** TRUE bounded-round BPE training (Sennrich et al., ACL 2016 — the
-    * algorithm pretraining pipelines actually run, replacing the
-    * closed-form [[subwordPieces]] proxy as the unit [[Pack]] budgets
-    * by): [[BpeRounds]] rounds of (count adjacent symbol pairs over
-    * the train-split word-frequency table; merge the argmax pair
-    * everywhere), starting from characters. Engine-neutral
-    * determinism: pair counts are EXACT INTEGER sums of word
-    * frequencies (overlapping adjacent positions counted, the
-    * textbook rule), the winner is the unique (cnt DESC, a ASC,
-    * b ASC) argmax (ASCII binary order in both engines), and merge
-    * application is the sentinel-string replace above. Each round's
-    * winner stays IN-PLAN as a broadcast 1-row frame (no collect); a
-    * sentinel ("", "", −1) row keeps the chain total when a round
-    * runs out of pairs (its pattern `␁␁␁␁` can never match — symbols
-    * are non-empty).
-    *
-    * Scale shape: training runs over the DISTINCT-WORD frequency
-    * table (vocab-sized — dimension-side work, the same economics as
-    * every tokenizer trainer); per round one keyed pair aggregation
-    * (map-combined) and one TakeOrdered(1) — never a data-sized
-    * single-partition shuffle — then a map-side replace, lineage cut
-    * per round ([[graft.ops.Dedup]] pagerankLoop's checkpoint
-    * discipline). Returns the [[BpeRounds]] winner frames in merge
-    * order, each (a, b, pat, rep). */
-  private[graft] def bpeMergeFrames(
-      s: SparkSession, d: String): Seq[DataFrame] = {
+  /** A word wrapped into the working representation, one symbol per
+    * character (Spark's `split(word, "")`). */
+  private def bpeWrapped(word: Column): Column =
+    concat(lit(BpeSep), array_join(split(word, ""), BpeSS), lit(BpeSep))
+
+  /** One trained merge rule (a, b) → ab, with its replace pattern and
+    * replacement in the working representation. The ("", "") sentinel
+    * is the no-op a round emits when no pairs remain: its pattern
+    * `␁␁␁␁` can never match, as symbols are non-empty. */
+  private[graft] case class BpeMerge(a: String, b: String) {
+    def pat: String = BpeSep + a + BpeSS + b + BpeSep
+    def rep: String = BpeSep + a + b + BpeSep
+  }
+  private[graft] val BpeNoMerge = BpeMerge("", "")
+
+  /** Spark's and DuckDB's string order: unsigned UTF-8 bytes, i.e.
+    * code-point order. `String.compareTo` compares UTF-16 code units
+    * and disagrees above the BMP (U+FF5E sorts before U+1F600 here,
+    * after it in UTF-16). */
+  private[graft] val Utf8Order: Ordering[String] = (x, y) =>
+    java.util.Arrays.compareUnsigned(
+      x.getBytes(StandardCharsets.UTF_8), y.getBytes(StandardCharsets.UTF_8))
+
+  /** The argmax pair of one round over wrapped words: adjacent symbol
+    * pairs (overlapping positions counted, the textbook rule) summed
+    * as exact longs over word frequencies, winner by
+    * (cnt DESC, a ASC, b ASC) in [[Utf8Order]]; [[BpeNoMerge]] when
+    * no word has two symbols. */
+  private def bpeWinner(words: Seq[(String, Long)]): BpeMerge = {
+    val cnt = scala.collection.mutable.HashMap.empty[BpeMerge, Long]
+    words.foreach { case (w, n) =>
+      val sy = w.substring(1, w.length - 1).split(BpeSS, -1)
+      sy.iterator.zip(sy.iterator.drop(1)).foreach { case (a, b) =>
+        val p = BpeMerge(a, b)
+        cnt(p) = cnt.getOrElse(p, 0L) + n
+      }
+    }
+    cnt.minByOption { case (p, c) => (-c, p.a, p.b) }(
+      Ordering.Tuple3(Ordering.Long, Utf8Order, Utf8Order))
+      .fold(BpeNoMerge)(_._1)
+  }
+
+  /** TRUE bounded-round BPE training (Sennrich et al., ACL 2016) as a
+    * pure fold over the wrapped `(w, n)` word-frequency table:
+    * `rounds` times, pick the [[bpeWinner]] and merge it everywhere
+    * with one non-overlapping `replace`. The arithmetic is the DuckDB
+    * [[sqlBpeCtes]] chain's, round for round (exact long counts, the
+    * same argmax order, the same sentinel, the same replace), so the
+    * oracle hash match certifies the trainer. Returns the merges in
+    * order, one per round. */
+  private[graft] def bpeTrain(words: Seq[(String, Long)],
+                              rounds: Int = BpeRounds): Seq[BpeMerge] =
+    (1 to rounds).foldLeft((words, Vector.empty[BpeMerge])) {
+      case ((ws, acc), _) =>
+        val m = bpeWinner(ws)
+        (ws.map { case (w, n) => (w.replace(m.pat, m.rep), n) }, acc :+ m)
+    }._2
+
+  /** The trained merges of the fixture, in merge order: ONE Spark job
+    * collects the train-split distinct-word table (vocab-sized —
+    * dimension-side work, the same economics as every tokenizer
+    * trainer: 31 distinct words at sf0.001 through sf0.1), then
+    * [[bpeTrain]] folds it on the driver. Training stays eager (the
+    * collect), so a timed action over a consumer still pays for it. */
+  private[graft] def bpeMerges(s: SparkSession, d: String): Seq[BpeMerge] = {
     require(BpeRounds <= BpeRoundsMax,
       s"BpeRounds=$BpeRounds exceeds $BpeRoundsMax: the replace-chain " +
         "consumers (bpePieces and the DuckDB oracle) are linear in " +
-        "merge count (one plan node + corpus pass per merge) — past " +
-        "this, segment with bpePiecesLM (longest-match; merge-count-" +
-        "independent plan) and retire the per-merge oracle")
-    val SS = BpeSep + BpeSep
-    def wrapped(c: Column): Column =
-      concat(lit(BpeSep), array_join(split(c, ""), SS), lit(BpeSep))
-    var words = docTokens(s, d)
+        "merge count (one replace per merge) — past this, segment " +
+        "with bpePiecesLM (longest-match; merge-count-independent " +
+        "plan) and retire the per-merge oracle")
+    val words = docTokens(s, d)
       .filter(Sampling.splitCol(col("doc_id")) === "train")
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
-      .select(wrapped(col("word")).as("w"), col("n"))
-      .localCheckpoint()
-    val merges = scala.collection.mutable.Buffer.empty[DataFrame]
-    (1 to BpeRounds).foreach { _ =>
-      val sy = split(col("w").substr(lit(2), length(col("w")) - 2), SS)
-      val pairs = words
-        .select(sy.as("sy"), col("n"))
-        .select(explode(when(size(col("sy")) >= 2,
-          expr("transform(sequence(1, size(sy) - 1), i -> " +
-            "struct(element_at(sy, i) AS a, element_at(sy, i + 1) AS b))"))
-          .otherwise(expr(
-            "CAST(array() AS array<struct<a:string,b:string>>)"))).as("p"),
-          col("n"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("n")).as("cnt"))
-      val winner = pairs
-        .unionByName(s.range(1).select(lit("").as("a"), lit("").as("b"),
-          lit(-1L).as("cnt")))
-        .orderBy(col("cnt").desc, col("a").asc, col("b").asc)
-        .limit(1)
-        .select(col("a"), col("b"),
-          concat(lit(BpeSep), col("a"), lit(SS), col("b"), lit(BpeSep))
-            .as("pat"),
-          concat(lit(BpeSep), col("a"), col("b"), lit(BpeSep)).as("rep"))
-        .localCheckpoint()
-      merges += winner
-      words = words
-        .crossJoin(broadcast(winner.select(col("pat"), col("rep"))))
-        .select(expr("replace(w, pat, rep)").as("w"), col("n"))
-        .localCheckpoint()
-    }
-    merges.toSeq
+      .select(bpeWrapped(col("word")).as("w"), col("n"))
+      .collect().map(r => (r.getString(0), r.getLong(1)))
+    bpeTrain(words.toSeq)
   }
 
   /** BPE segmentation of the FULL corpus token stream by the trained
     * merge chain: wrap each word's characters, apply the
-    * [[BpeRounds]] replaces in merge order (each a broadcast
-    * crossJoin + one map-side string replace — the corpus never
-    * shuffles for segmentation), split the sentinels back out.
-    * Returns (doc_id, word, pieces); concatenating `pieces` recovers
-    * `word` exactly (every piece is a substring of the word in
-    * order — the losslessness spec proves it per token). */
+    * [[BpeRounds]] merges in order as literal `replace` calls (one
+    * map-side projection — the corpus never shuffles for
+    * segmentation), split the sentinels back out. Returns
+    * (doc_id, word, pieces); concatenating `pieces` recovers `word`
+    * exactly (every piece is a substring of the word in order — the
+    * losslessness spec proves it per token). */
   private[graft] def bpePieces(s: SparkSession, d: String): DataFrame = {
-    val SS = BpeSep + BpeSep
-    var seg = docTokens(s, d).select(col("doc_id"), col("word"),
-      concat(lit(BpeSep), array_join(split(col("word"), ""), SS),
-        lit(BpeSep)).as("w"))
-    bpeMergeFrames(s, d).foreach { m =>
-      seg = seg.crossJoin(broadcast(m.select(col("pat"), col("rep"))))
-        .select(col("doc_id"), col("word"),
-          expr("replace(w, pat, rep)").as("w"))
+    val seg = bpeMerges(s, d).foldLeft(bpeWrapped(col("word"))) { (w, m) =>
+      replace(w, lit(m.pat), lit(m.rep))
     }
-    seg.select(col("doc_id"), col("word"),
-      split(col("w").substr(lit(2), length(col("w")) - 2), SS).as("pieces"))
+    docTokens(s, d).select(col("doc_id"), col("word"), seg.as("w"))
+      .select(col("doc_id"), col("word"),
+        split(col("w").substr(lit(2), length(col("w")) - 2), BpeSS)
+          .as("pieces"))
   }
 
-  /** The trained BPE piece vocabulary folded to ONE broadcastable row:
-    * the distinct non-sentinel merge products (single characters are
-    * implicit — the longest-match fallback). R pieces for R rounds —
-    * dimension-sized at any corpus scale. */
-  private[graft] def bpeVocab(s: SparkSession, d: String): DataFrame =
-    bpeMergeFrames(s, d)
-      .map(m => m.select(concat(col("a"), col("b")).as("piece")))
-      .reduce(_ unionAll _)
-      .filter(length(col("piece")) > 0)
-      .agg(array_distinct(collect_list(col("piece"))).as("vb"))
+  /** The trained BPE piece vocabulary: the distinct non-sentinel merge
+    * products in merge order (single characters are implicit — the
+    * longest-match fallback). R pieces for R rounds — dimension-sized
+    * at any corpus scale. */
+  private[graft] def bpeVocab(s: SparkSession, d: String): Seq[String] =
+    bpeMerges(s, d).map(m => m.a + m.b).filter(_.nonEmpty).distinct
 
   /** The POST-PIN BPE segmenter (round-16 verdict #4 — the door the
     * [[BpeRoundsMax]] wall pointed at): greedy LONGEST-MATCH over the
     * trained piece vocabulary, the WordPiece-style maximal-munch
     * inference every production tokenizer ships when the merge count
     * makes per-merge plan nodes unaffordable. ONE corpus pass with a
-    * CONSTANT-SIZE plan: the vocabulary travels as one broadcast
+    * CONSTANT-SIZE plan: the vocabulary travels as one literal
     * array; per word, a single `aggregate` fold over character
     * positions picks the longest vocab piece prefixing the remainder
     * (single characters are the implicit fallback, so the fold always
     * advances — segmentation is total and lossless by construction).
     * Plan size is independent of the merge count — 30 k merges cost a
-    * bigger broadcast array, not 30 k plan nodes and corpus passes
+    * bigger literal array, not 30 k plan nodes and corpus passes
     * (at that vocab size the inner linear probe becomes a trie inside
-    * a custom Expression; the PLAN shape — broadcast dictionary, one
+    * a custom Expression; the PLAN shape — one dictionary, one
     * map-side pass — is already the production one).
     *
     * Maximal munch and merge-order application are DIFFERENT
@@ -1047,7 +1049,7 @@ object Text {
         |  (b, v) -> IF(length(v) > length(b)
         |      AND substring(word, st.pos, length(v)) = v, v, b))""".stripMargin
     docTokens(s, d)
-      .crossJoin(broadcast(bpeVocab(s, d)))
+      .withColumn("vb", lit(bpeVocab(s, d).toArray))
       .withColumn("pieces",
         when(length(col("word")) === 0,
           expr("CAST(array() AS array<string>)"))
@@ -1134,7 +1136,7 @@ object Text {
   private val bpeLm: Q = (s, d) => bpeAccounting(s, d, bpePiecesLM)
 
   /** CTE chain `btok/w0/(syR,pxR,pR,mR,wR)×BpeRounds/bseg` — the
-    * DuckDB restatement of [[bpeMergeFrames]] + [[bpePieces]]: w0 is
+    * DuckDB restatement of [[bpeMerges]] + [[bpePieces]]: w0 is
     * the wrapped train-split word-frequency table, each round counts
     * pairs off the previous words table (UNNEST(generate_series) over
     * the split symbol list — overlapping adjacent positions, exact

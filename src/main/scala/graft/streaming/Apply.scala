@@ -56,13 +56,18 @@ object Apply {
         Some(Op(m.user_id, m.event_id, "insert",
           None, None, Some(m.event_type), Some(m.value))))
 
-  /** Fold one key's events (already in sequence order). */
+  /** Fold one key's events (already in sequence order); linear in the
+    * slice (ops accumulate in a builder). */
   def run(ms: Iterator[Mutation], init: KeyState = initialState)
-      : (KeyState, List[Op]) =
-    ms.foldLeft((init, List.empty[Op])) { case ((st, acc), m) =>
+      : (KeyState, List[Op]) = {
+    val ops = List.newBuilder[Op]
+    val last = ms.foldLeft(init) { (st, m) =>
       val (st2, op) = step(st, m)
-      (st2, acc ++ op)
+      ops ++= op
+      st2
     }
+    (last, ops.result())
+  }
 
   /** Batch twin: derive ops from a recorded feed. */
   def deriveBatch(events: Dataset[Mutation]): Dataset[Op] = {

@@ -75,14 +75,18 @@ object Validate {
     }
   }
 
-  /** Fold a publisher's messages (already in arrival order). */
+  /** Fold a publisher's messages (already in arrival order); linear in
+    * the slice (violations accumulate in a builder). */
   def run(msgs: Iterator[Msg], init: TxnState = initialState)
-      : (TxnState, List[Violation]) =
-    msgs.foldLeft((init, List.empty[Violation])) {
-      case ((st, acc), m) =>
-        val (st2, vs) = step(st, m)
-        (st2, acc ++ vs)
+      : (TxnState, List[Violation]) = {
+    val out = List.newBuilder[Violation]
+    val last = msgs.foldLeft(init) { (st, m) =>
+      val (st2, vs) = step(st, m)
+      out ++= vs
+      st2
     }
+    (last, out.result())
+  }
 
   /** Batch twin: validate a recorded stream. */
   def validateBatch(msgs: Dataset[Msg]): Dataset[Violation] = {
@@ -203,15 +207,19 @@ object Validate {
     }
   }
 
-  /** Fold a group's messages (already in arrival order). */
+  /** Fold a group's messages (already in arrival order); linear in the
+    * slice, like [[run]]. */
   def runGroup(msgs: Iterator[GMsg],
                init: GroupTxnState = initialGroupState)
-      : (GroupTxnState, List[GroupEvent]) =
-    msgs.foldLeft((init, List.empty[GroupEvent])) {
-      case ((st, acc), m) =>
-        val (st2, es) = stepGroup(st, m)
-        (st2, acc ++ es)
+      : (GroupTxnState, List[GroupEvent]) = {
+    val out = List.newBuilder[GroupEvent]
+    val last = msgs.foldLeft(init) { (st, m) =>
+      val (st2, es) = stepGroup(st, m)
+      out ++= es
+      st2
     }
+    (last, out.result())
+  }
 
   /** Batch twin: validate a recorded group stream. */
   def validateGroupBatch(msgs: Dataset[GMsg]): Dataset[GroupEvent] = {

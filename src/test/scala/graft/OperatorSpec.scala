@@ -1078,11 +1078,10 @@ class OperatorSpec extends AnyFunSuite {
       .count() == 0, "empty piece emitted")
     // the BpeRounds winners are distinct, non-sentinel merges — the
     // fixture has enough pair mass for every round to train a real rule
-    val merges = Text.bpeMergeFrames(spark, sf)
+    val merges = Text.bpeMerges(spark, sf)
     assert(merges.size == Text.BpeRounds)
-    val all = merges.map(_.select(col("a"), col("b")))
-      .reduce(_ unionAll _).collect().toSeq
-    assert(all.forall(r => r.getString(0).nonEmpty && r.getString(1).nonEmpty),
+    val all = merges.map(m => (m.a, m.b))
+    assert(all.forall { case (a, b) => a.nonEmpty && b.nonEmpty },
       s"a sentinel winner surfaced: $all")
     assert(all.distinct.size == all.size, s"duplicate merge trained: $all")
     // determinism: the whole train+segment lineage reproduces itself
