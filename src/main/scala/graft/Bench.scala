@@ -61,18 +61,18 @@ object Bench {
         .filter(_.getType == java.lang.management.MemoryType.HEAP)
     }
     val peakHeapMb = scala.collection.mutable.Map.empty[String, Double]
-    def timedPass(): Map[String, (Double, Boolean)] = queries.map {
+    def timedPass(): Map[String, (Double, Option[String])] = queries.map {
       case (name, fn) =>
         if (heapProbe) { System.gc(); heapPools.foreach(_.resetPeakUsage()) }
         val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-          catch { case NonFatal(_) => false }
+        val err = try { fn(spark, sfDir).count(); None }
+          catch { case NonFatal(e) => Some(e.getClass.getName) }
         val dt = (System.nanoTime() - t0) / 1e9
         if (heapProbe) {
           val mb = heapPools.map(_.getPeakUsage.getUsed).sum / 1e6
           peakHeapMb(name) = math.max(mb, peakHeapMb.getOrElse(name, 0.0))
         }
-        name -> ((dt, ok))
+        name -> ((dt, err))
     }
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "5").toInt
     val allPasses = (1 to passes).map(_ => timedPass())
@@ -84,7 +84,7 @@ object Bench {
     }
     val byQuery = queries.keys.map { k =>
       k -> allPasses.flatMap { p =>
-        val (v, ok) = p(k); if (ok) Some(v) else None
+        val (v, err) = p(k); if (err.isEmpty) Some(v) else None
       }
     }.toMap
     val results = byQuery.map { case (k, xs) => k -> median(xs) }
@@ -122,12 +122,12 @@ object Bench {
       // headOption + per-key get: a zero-pass run or a key absent from
       // pass 1 degrades to the -1 unknown marker instead of throwing
       k -> allPasses.headOption.flatMap(_.get(k)).collect {
-        case (v, true) => v
+        case (v, None) => v
       }.getOrElse(-1.0)
     }.toMap
     val warmMedian = queries.keys.map { k =>
       val later = allPasses.drop(1).flatMap { p =>
-        val (v, ok) = p(k); if (ok) Some(v) else None
+        val (v, err) = p(k); if (err.isEmpty) Some(v) else None
       }
       k -> median(later)
     }.toMap
@@ -139,6 +139,10 @@ object Bench {
     // partial run is unmistakable.
     val failed = byQuery.collect { case (k, xs) if xs.isEmpty => k }
       .toSeq.sorted
+    // ... and every key that failed in any pass keeps its cause: the
+    // exception class of its first failed pass
+    val errors = queries.keys.toSeq.sorted.flatMap(k =>
+      allPasses.flatMap(_(k)._2).headOption.map(k -> _))
     // Locale.ROOT: a comma-decimal default locale would emit "0,500"
     // and corrupt the contract JSON line
     def r3(v: Double): String =
@@ -147,6 +151,8 @@ object Bench {
       m.map { case (k, v) => "\"" + k + "\":" + r3(v) }.mkString("{", ",", "}")
     def jsonList(xs: Seq[String]): String =
       xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def jsonStrMap(m: Seq[(String, String)]): String =
+      m.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
     val total = results.valuesIterator.filter(_ >= 0).sum
     def jsonSpread(m: Iterable[(String, (Double, Double))]): String =
       m.map { case (k, (lo, hi)) => "\"" + k + "\":[" + r3(lo) + "," + r3(hi) + "]" }
@@ -156,7 +162,7 @@ object Bench {
     val heapJson =
       if (heapProbe) s""","peak_heap_mb":${jsonMap(peakHeapMb.toSeq.sortBy(-_._2))}"""
       else ""
-    val full = s"""{"n":${results.size},"n_failed":${failed.size},"failed":${jsonList(failed)},"total_sec":${r3(total)},"sf":"$sfDir","passes":$passes,"queries":${jsonMap(results)},"cold":${jsonMap(coldPass)},"warm_median":${jsonMap(warmMedian)},"min":${jsonMap(minPass)},"spread":${jsonSpread(spread)}$heapJson}"""
+    val full = s"""{"n":${results.size},"n_failed":${failed.size},"failed":${jsonList(failed)},"errors":${jsonStrMap(errors)},"total_sec":${r3(total)},"sf":"$sfDir","passes":$passes,"queries":${jsonMap(results)},"cold":${jsonMap(coldPass)},"warm_median":${jsonMap(warmMedian)},"min":${jsonMap(minPass)},"spread":${jsonSpread(spread)}$heapJson}"""
     println(s"BENCH_FULL $full")
     // ... and persisted to a file so no round's per-query history can be
     // lost to stdout-tail truncation again (BENCH_r01's total was)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Det
-import graft.io.Tables
+import graft.io.{Store, Tables}
 
 /** CDC / stream-semantics operators — the reference's actual surface
   * recast on Spark (SURVEY.md §2.H).
@@ -52,26 +52,6 @@ object Cdc {
     * checkpoint), `== 9` is day-2's live batch (10%). */
   private[graft] val Day2NewMin = 8
 
-  /** CDC-family store version, composed beside the shared
-    * [[Dedup.StoreFormatVersion]]: bump THIS when a CDC store builder
-    * changes, without invalidating the other families' stores
-    * (round-13 ADVICE — previously a CDC builder change silently
-    * served a stale snapshot unless someone remembered to bump the
-    * dedup-wide token). */
-  private[graft] val CdcStoreVersion = 1
-
-  /** Store dir for a derived artifact of `d`'s EVENTS table —
-    * [[Dedup.storeDir]]'s exact naming contract (version tokens =
-    * code freshness, content stamp = data freshness) under its
-    * own root (SPARK_GRAFT_CDC_STORE, default /tmp/graft-cdc-store). */
-  private def cdcStoreDir(d: String, kind: String): String = {
-    val root = sys.env.getOrElse("SPARK_GRAFT_CDC_STORE", "/tmp/graft-cdc-store")
-    new java.io.File(root).mkdirs()
-    s"$root/t${d.replaceAll("[^A-Za-z0-9._-]", "_")}-$kind-" +
-      s"v${Dedup.StoreFormatVersion}.c$CdcStoreVersion-" +
-      Dedup.fsStamp(s"$d/events.parquet")
-  }
-
   /** One LWW fold step over a snapshot ∪ ops union: keeps each key's
     * winning row under the (ts, event_id) total order, columns
     * unchanged (raw ts) so the output can re-enter a LATER fold —
@@ -83,10 +63,10 @@ object Cdc {
 
   /** The day-0 compaction CHECKPOINT: the LWW fold of the first 80% of
     * the sequence space, published once through the locked store layer
-    * ([[Dedup.storedTable]]). Rows keep their ORIGINAL (ts, event_id)
+    * ([[Store.storedTable]]). Rows keep their ORIGINAL (ts, event_id)
     * so the snapshot re-enters a later fold as ordinary ops. */
   private[graft] def storedSnapshot(s: SparkSession, d: String): DataFrame =
-    Dedup.storedTable(s, cdcStoreDir(d, "snap0")) {
+    Store.storedTable(s, Store.dir(Store.Cdc, d, "snap0")) {
       lwwStep(stream(s, d)
         .filter(pmod(col("event_id"), lit(10)) < Day2NewMin))
         .select(col("user_id"), col("event_id"), col("event_type"),
@@ -103,8 +83,8 @@ object Cdc {
     * fold(snap1 ∪ day-2) = fold(fold(snap0 ∪ day-1) ∪ day-2) =
     * fold(all ops). */
   private[graft] def storedSnapshot1(s: SparkSession, d: String): DataFrame =
-    Dedup.storedTable(s, cdcStoreDir(d, "snap1"),
-        upstream = Seq(cdcStoreDir(d, "snap0"))) {
+    Store.storedTable(s, Store.dir(Store.Cdc, d, "snap1"),
+        upstream = Seq(Store.dir(Store.Cdc, d, "snap0"))) {
       lwwStep(storedSnapshot(s, d).unionByName(
           stream(s, d)
             .filter(pmod(col("event_id"), lit(10)) === Day2NewMin)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Det
-import graft.io.Tables
+import graft.io.{Store, Tables}
 
 /** Deduplication operators for the LLM-data-pipeline surface
   * (SURVEY.md §2.J): exact hash dedup, exact near-duplicate pairs
@@ -447,412 +447,12 @@ object Dedup {
       .orderBy(col("a_id").asc, col("b_id").asc)
   }
 
-  /** Filesystem identity stamp of a fixture table — file names, sizes
-    * and mtimes folded through md5, computed from metadata alone (no
-    * data read, no Spark job). Guards [[storedCorpusSigs]] against
-    * fixture regeneration: GenSf rewriting the parquet changes the
-    * stamp, which changes the store path, which forces a rebuild. In a
-    * production deployment the table format's snapshot id
-    * (Delta/Iceberg) plays exactly this role. */
-  private[graft] def fsStamp(path: String): String = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).toSeq.flatten.sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    val sig = walk(new java.io.File(path))
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString(";")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-  }
-
-  /** Bumped whenever a store BUILDER changes — persisted columns,
-    * thresholds ([[VerifyMatchMin]], [[PrRounds]]), band geometry, or
-    * the layout inside the dir. The token is folded into the store
-    * PATH ([[storeDir]]), so a code change deterministically
-    * invalidates every cached table instead of silently serving a
-    * stale schema from /tmp between runs (the content stamp keys DATA
-    * freshness only; it cannot see code changes). */
-  // v3: day-chain restructure (d1labels reads the appended d1pairs
-  // store instead of re-deriving pairs from d1sigs; d0pairs/d1ranks
-  // added) — the in-the-wild proof of this token's purpose: the v2
-  // d1labels store carried an _UPSTREAM receipt naming d1sigs, and the
-  // coherence guard REFUSED it the moment the builder changed.
-  //
-  // PER-FAMILY TOKENS (round-13 ADVICE): this constant versions the
-  // DEDUP builders + the shared store machinery only. The other store
-  // families compose their OWN version beside it (Vectors.PqStoreVersion,
-  // Cdc.CdcStoreVersion, Text.TfStoreVersion), so a builder change in
-  // one family invalidates only its own caches — and a dedup bump no
-  // longer needlessly rebuilds every PQ/CDC/TF store.
-  private[graft] val StoreFormatVersion = 3
-
-  /** TF-family store version (round-14: lives HERE, beside the store
-    * machinery, so [[legacySwept]] can compare a dir's tf tag against
-    * the current one without a Text↔Dedup init cycle). The TF stores
-    * live under the dedup root with the family tag composed into the
-    * KIND (`tf<day>.t<N>`), which the generic versioned-dir regex
-    * cannot age out — the sweep below handles the tf tag explicitly
-    * (round-13 ADVICE: a TfStoreVersion bump used to strand old
-    * `-tf*-v3-<stamp>` dirs on disk forever). Bump when the TF
-    * builders change. */
-  // t2: the TF chain grew a third generation (tf1 now appends ONLY
-  // doc_id%10==8; tf2 appends ==9) — a stale t1 tf1 store holds the
-  // old two-way split's ≥8 batch and must not satisfy the new chain.
-  private[graft] val TfStoreVersion = 2
-
-  private[ops] def storeRoot: String =
-    sys.env.getOrElse("SPARK_GRAFT_SIG_STORE", "/tmp/graft-sig-store")
-
-  /** One-time (per JVM) sweep of legacy store dirs the current layout
-    * can never read: underscore-prefixed names (the pre-"t" sanitized
-    * form Hadoop's listing filter hides) and pre-versioned "t…-<stamp>"
-    * names (no `-vN-` token). Both are rebuilt under new names and
-    * would otherwise accumulate stale parquet on disk forever.
-    * Best-effort: a failure to delete is ignored, never fatal.
-    * SAFETY (round-13 ADVICE): the sweep runs ONLY against the
-    * built-in /tmp default — when SPARK_GRAFT_SIG_STORE points the
-    * root anywhere else, nothing is ever deleted there (a user
-    * directory may hold unrelated content, and a concurrent JVM on
-    * older code may be mid-read of its own legacy store). */
-  private lazy val legacySwept: Unit =
-    if (sys.env.contains("SPARK_GRAFT_SIG_STORE")) ()
-    else {
-      val versioned = """.*-v\d+[0-9a-z.]*-[0-9a-f]{12}$""".r
-      val tfTag = """-tf\d+\.t(\d+)-v""".r
-      def rmAll(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmAll)
-        f.delete(); ()
-      }
-      try Option(new java.io.File(storeRoot).listFiles()).toSeq.flatten
-        .filter { f =>
-          val n = f.getName
-          f.isDirectory && !n.contains(".tmp-") &&
-            (n.startsWith("_") ||
-              (n.startsWith("t") && versioned.findFirstIn(n).isEmpty) ||
-              // superseded TF-family tags (the family version lives in
-              // the KIND, invisible to the versioned regex above)
-              (n.startsWith("t") && tfTag.findFirstMatchIn(n)
-                .exists(_.group(1).toInt != TfStoreVersion)))
-        }.foreach(rmAll)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-
-  /** Store directory for a derived artifact of `d`'s documents table:
-    * `<root>/<sanitized d>-<kind>-v<format>-<content stamp>`. The
-    * stamp keys DATA freshness (fixture regeneration ⇒ new path ⇒
-    * rebuild), the [[StoreFormatVersion]] token keys CODE freshness
-    * (builder change ⇒ new path ⇒ rebuild); the root defaults to
-    * /tmp/graft-sig-store and is overridable with
-    * SPARK_GRAFT_SIG_STORE. */
-  private[ops] def storeDir(d: String, kind: String): String = {
-    legacySwept
-    // "t" prefix: the sanitized fixture path starts with "_" (absolute
-    // path → leading separator → underscore), and Hadoop's listing
-    // filter treats underscore-prefixed paths as hidden — reads work
-    // when the dir is the explicit root, but every access logs an
-    // "All paths were ignored" warning and any consumer that GLOBS the
-    // store root would silently skip the table
-    s"$storeRoot/t${d.replaceAll("[^A-Za-z0-9._-]", "_")}-$kind-v$StoreFormatVersion-" +
-      fsStamp(s"$d/documents.parquet")
-  }
-
-  private def rm(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rm)
-    f.delete(); ()
-  }
-
-  /** Name of the coherence marker a DERIVED store carries: a text file
-    * listing the basenames of the store(s) its build read. Read-side
-    * verification ([[checkUpstream]]) catches a store root whose
-    * entries went incoherent (half-cleared, re-stamped, or copied
-    * across fixtures) — normally impossible because every store path
-    * embeds the same content stamp, but cheap to verify and loud when
-    * it happens. */
-  private[graft] val UpstreamMarker = "_UPSTREAM"
-
-  private def checkUpstream(target: java.io.File, expected: Seq[String]): Unit = {
-    val m = new java.io.File(target, UpstreamMarker)
-    if (expected.nonEmpty && m.exists()) {
-      val recorded = new String(
-        java.nio.file.Files.readAllBytes(m.toPath), "UTF-8").trim
-        .split("\n").toSeq.filter(_.nonEmpty)
-      val want = expected.map(p => new java.io.File(p).getName)
-      require(recorded == want,
-        s"store ${target.getName} is INCOHERENT with its upstream: built " +
-          s"from ${recorded.mkString(",")} but the current upstream is " +
-          s"${want.mkString(",")} — wipe $storeRoot and rebuild")
-    }
-  }
-
-  /** Atomically publish the fully built dir `tmp` at `target` under a
-    * cross-process file lock. The lock closes the ADVICE-flagged
-    * check-then-delete race: without it, a loser could observe
-    * `!ready`, then delete a store the winner had JUST finished
-    * renaming into place. Under the lock the decision is serialized —
-    * a complete (`_SUCCESS`-bearing) target is never deleted, only a
-    * crashed earlier build (target present, no `_SUCCESS`) is cleared
-    * before the rename. Same-parent rename ⇒ same filesystem ⇒ atomic;
-    * cross-JVM exclusion via [[java.nio.channels.FileLock]] (released
-    * by the OS even on crash), same-JVM exclusion via the interned
-    * path monitor (overlapping FileLocks in one JVM throw instead of
-    * blocking). */
-  private def publish(tmp: java.io.File, target: java.io.File): Unit =
-    target.getPath.intern.synchronized {
-      def ready = new java.io.File(target, "_SUCCESS").exists()
-      val lockFile = new java.io.File(target.getParentFile, target.getName + ".lock")
-      val ch = java.nio.channels.FileChannel.open(lockFile.toPath,
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val lock = ch.lock()
-        try {
-          if (ready) rm(tmp) // lost to a complete build — byte-equivalent
-          else {
-            if (target.exists()) rm(target) // crashed build, no _SUCCESS
-            require(tmp.renameTo(target),
-              s"stored-table publish failed for ${target.getPath}")
-          }
-        } finally lock.release()
-      } finally ch.close()
-      require(ready, s"stored-table publish failed for ${target.getPath}")
-    }
-
-  /** Build-once-read-forever parquet materialization: if `dir` lacks a
-    * `_SUCCESS` marker, run `build` into a session-unique temp sibling
-    * and atomically [[publish]] it into place; then read the table
-    * back as plain parquet. Nothing is ever written AT `dir` directly,
-    * so a reader never sees a half-written directory. The content
-    * stamp + version token in `dir` (see [[storeDir]]) play the
-    * table-format snapshot-id role a Delta/Iceberg deployment would
-    * use. `upstream` lists the store dirs the build READS — recorded
-    * in the published dir ([[UpstreamMarker]]) and re-verified on
-    * every read, so an incoherent store root refuses loudly instead of
-    * pairing fresh tables with stale ones. `partitionBy` writes the
-    * store hive-partitioned on those columns — physical layout
-    * pruning: a reader whose join/filter keys on a partition column
-    * scans only the matching subdirectories (static filters at plan
-    * time, broadcast-derived keys via dynamic partition pruning). The
-    * partition columns move to the END of the read-back schema, so
-    * every consumer must select by name (all do). Partition columns
-    * are LONG by engine convention (required at write): Spark's
-    * read-side partition-column type inference would otherwise narrow
-    * a long-valued directory name to IntegerType and silently change
-    * the store schema (round-15 ADVICE), so read-back casts them
-    * right back. A partitioned publish also writes a [[CellsMarker]]
-    * sidecar — the sorted distinct partition values — so a planner
-    * can learn the store's partition universe from one small file
-    * read instead of a directory listing (at 100 TB, a million-entry
-    * namespace scan). */
-  private[ops] def storedTable(s: SparkSession, dir: String,
-                          upstream: Seq[String] = Nil,
-                          partitionBy: Seq[String] = Nil)
-                         (build: => DataFrame): DataFrame = {
-    val target = new java.io.File(dir)
-    def ready = new java.io.File(target, "_SUCCESS").exists()
-    if (!ready) {
-      val tmp = new java.io.File(target.getParentFile,
-        s"${target.getName}.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-      // repartition on the partition columns first: a partitionBy
-      // write from an N-task frame otherwise emits up to N files PER
-      // partition value (measured 2× slower reads at fixture scale
-      // from ~1400 tiny files); clustered, each value gets its file
-      // count from the tasks that actually hold it (~1 here)
-      // _CELLS records only the FIRST partition column's level-1 dirs:
-      // a multi-column partitioned store would publish a first-level-
-      // only sidecar that storedPartValues consumers would misread as
-      // the full universe and wrongly drop their prune filter
-      // (round-16 ADVICE) — refuse at publish until the sidecar
-      // encodes per-column universes.
-      require(partitionBy.size <= 1,
-        s"storedTable supports at most one partition column, got " +
-          s"$partitionBy — the _CELLS sidecar contract is single-level")
-      val frame =
-        if (partitionBy.nonEmpty) build.repartition(partitionBy.map(col): _*)
-        else build
-      partitionBy.foreach { c =>
-        require(frame.schema(c).dataType ==
-            org.apache.spark.sql.types.LongType,
-          s"store partition column $c must be LONG (engine convention " +
-            "— read-back casts partition columns to long)")
-      }
-      val w = frame.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .parquet(tmp.getPath)
-      if (upstream.nonEmpty)
-        java.nio.file.Files.write(tmp.toPath.resolve(UpstreamMarker),
-          upstream.map(p => new java.io.File(p).getName)
-            .mkString("", "\n", "\n").getBytes("UTF-8"))
-      if (partitionBy.nonEmpty) writeCellsSidecar(tmp, partitionBy.head)
-      publish(tmp, target)
-    }
-    checkUpstream(target, upstream)
-    readStored(s, dir, partitionBy)
-  }
-
-  /** Read-back handles memoized per (session, store dir): a published
-    * store is IMMUTABLE — the content stamp + version token key its
-    * path, so a rebuild is always a new dir — which makes the
-    * DataFrame handle (whose InMemoryFileIndex holds the listing and
-    * partition discovery) safe to reuse for the session's lifetime.
-    * This is the snapshot-handle cache every table-format client
-    * (Delta/Iceberg) keeps; without it each query re-paid the
-    * partition-dir walk + footer read at plan time — measured 0.32 s
-    * per read on a 45-partition fixture store vs 0.19 s for the scan
-    * itself, the bulk of the r15 stored-ANN toll. */
-  // Keyed BY THE SESSION OBJECT (round-16 ADVICE): identity hashes are
-  // reused after GC, so the old (identityHashCode, dir) key could
-  // silently serve a handle bound to a different (possibly stopped)
-  // session, and entries were never evicted. SparkSession keeps default
-  // identity equals, so LinkedHashMap keying on the object itself makes
-  // collisions impossible. Eviction is explicit, not weak-reference-
-  // based — a cached DataFrame strongly references its session (value →
-  // key), so a WeakHashMap here could never clear an entry: instead,
-  // entries of a STOPPED context are purged on every lookup, and an LRU
-  // cap bounds live-session growth (an evicted session just re-pays one
-  // listing on its next read).
-  private val ReadMemoSessionCap = 8
-  private val readMemo =
-    new java.util.LinkedHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, DataFrame]](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[SparkSession,
-            java.util.concurrent.ConcurrentHashMap[String, DataFrame]]) =
-        size > ReadMemoSessionCap
-    }
-
-  /** Live sessions currently holding memoized store handles — test
-    * hook for the eviction contract. */
-  private[graft] def readMemoSessionCount: Int =
-    readMemo.synchronized(readMemo.size)
-
-  private def readStored(s: SparkSession, dir: String,
-                         partitionBy: Seq[String]): DataFrame = {
-    val perSession = readMemo.synchronized {
-      readMemo.entrySet().removeIf(ent =>
-        ent.getKey.sparkContext.isStopped)
-      var m = readMemo.get(s)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-        readMemo.put(s, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(dir, _ => {
-      val raw = s.read.parquet(dir)
-      partitionBy.foldLeft(raw)((df, c) =>
-        df.withColumn(c, col(c).cast("long")))
-    })
-  }
-
-  /** Sidecar naming the partition universe of a hive-partitioned
-    * store (see [[storedTable]]). */
-  private[graft] val CellsMarker = "_CELLS"
-
-  /** Write the `_CELLS` partition-universe sidecar from the directory
-    * names a (possibly appended) partitioned write just created —
-    * sorted longs, one per line. A NULL partition value writes
-    * `col=__HIVE_DEFAULT_PARTITION__` — parsing it with .toLong made
-    * the publish fail with an opaque NumberFormatException AFTER the
-    * parquet write (round-16 ADVICE); name the cause instead:
-    * partition values must be non-null longs by engine convention. */
-  private def writeCellsSidecar(tmp: java.io.File, partCol: String): Unit = {
-    val dirs = Option(tmp.listFiles()).toSeq.flatten
-      .filter(f => f.isDirectory && f.getName.startsWith(partCol + "="))
-      .map(_.getName.split("=", 2)(1))
-    val bad = dirs.filterNot(_.matches("-?[0-9]+"))
-    require(bad.isEmpty,
-      s"store ${tmp.getName}: non-numeric partition dirs $bad — " +
-        s"null or non-long values in partition column $partCol " +
-        "(engine convention: non-null LONG)")
-    java.nio.file.Files.write(tmp.toPath.resolve(CellsMarker),
-      dirs.map(_.toLong).sorted.mkString("", "\n", "\n").getBytes("UTF-8"))
-  }
-
-  /** The partition universe recorded at publish — None for a store
-    * published before the sidecar existed or not partitioned at all
-    * (callers must then fall back to not pruning / listing). */
-  private[graft] def storedPartValues(dir: String): Option[Seq[Long]] = {
-    val f = new java.io.File(dir, CellsMarker)
-    if (!f.exists()) None
-    else Some(new String(
-        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      .split("\n").toSeq.filter(_.nonEmpty).map(_.toLong))
-  }
-
-  /** Day-chain store builder — publish day N+1's table by APPENDING to
-    * day N's, without recomputing day N: every data file of `baseDir`
-    * is HARD-LINKED into the new dir (an O(#files) metadata operation
-    * and zero data movement — exactly the add-files append a
-    * Delta/Iceberg commit performs), then `batch` alone is written in
-    * append mode beside the linked files. The published dir is a
-    * self-contained plain-parquet table = base ∪ batch; the base table
-    * is never read, rewritten, or re-derived. Publication is the same
-    * locked atomic rename as [[storedTable]]. */
-  private[ops] def storedTableAppend(s: SparkSession, dir: String,
-                               baseDir: String,
-                               partitionBy: Seq[String] = Nil)
-                               (batch: => DataFrame): DataFrame = {
-    val target = new java.io.File(dir)
-    def ready = new java.io.File(target, "_SUCCESS").exists()
-    if (!ready) {
-      require(partitionBy.size <= 1,
-        s"storedTableAppend supports at most one partition column, got " +
-          s"$partitionBy — the _CELLS sidecar contract is single-level")
-      val base = new java.io.File(baseDir)
-      require(new java.io.File(base, "_SUCCESS").exists(),
-        s"append base $baseDir is not published")
-      val tmp = new java.io.File(target.getParentFile,
-        s"${target.getName}.tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}")
-      tmp.mkdirs()
-      def linkInto(srcDir: java.io.File, dstDir: java.io.File): Unit =
-        Option(srcDir.listFiles()).toSeq.flatten
-          .filter(f => f.isFile && f.getName.startsWith("part-"))
-          .foreach(f => java.nio.file.Files.createLink(
-            dstDir.toPath.resolve(f.getName), f.toPath))
-      if (partitionBy.isEmpty) linkInto(base, tmp)
-      else {
-        // hive-partitioned base: hard-link each partition dir's data
-        // files under the same dir name — the append below then adds
-        // the batch's files beside them (new cells create new dirs),
-        // and the sidecar is rebuilt over the UNION of dirs. Still an
-        // O(#files) metadata-only commit, zero data movement.
-        Option(base.listFiles()).toSeq.flatten
-          .filter(f => f.isDirectory &&
-            f.getName.startsWith(partitionBy.head + "="))
-          .foreach { pd =>
-            val nd = new java.io.File(tmp, pd.getName)
-            nd.mkdirs()
-            linkInto(pd, nd)
-          }
-      }
-      val frame =
-        if (partitionBy.nonEmpty) batch.repartition(partitionBy.map(col): _*)
-        else batch
-      partitionBy.foreach { c =>
-        require(frame.schema(c).dataType ==
-            org.apache.spark.sql.types.LongType,
-          s"store partition column $c must be LONG (engine convention " +
-            "— read-back casts partition columns to long)")
-      }
-      val w = frame.write.mode("append")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .parquet(tmp.getPath)
-      java.nio.file.Files.write(tmp.toPath.resolve(UpstreamMarker),
-        (base.getName + "\n").getBytes("UTF-8"))
-      if (partitionBy.nonEmpty) writeCellsSidecar(tmp, partitionBy.head)
-      publish(tmp, target)
-    }
-    checkUpstream(target, Seq(baseDir))
-    readStored(s, dir, partitionBy)
-  }
-
   /** The STORED corpus signature/band table behind
     * [[incrementalStored]]: built ONCE per (fixture path, content
     * stamp) — tokenize + 64 salted hashes + band agg over the old
     * corpus — then read back as plain parquet forever after. */
   private[graft] def storedCorpusSigs(s: SparkSession, d: String): DataFrame =
-    storedTable(s, storeDir(d, "oldsigs")) {
+    Store.storedTable(s, Store.dir(Store.Dedup, d, "oldsigs")) {
       val isOld = pmod(col("doc_id"), lit(NewBatchMod)) =!= NewBatchMod - 1
       sigBands(docTokens(s, d).filter(isOld))
     }
@@ -873,7 +473,7 @@ object Dedup {
     * immutable, so the table is append-only under ingest; the
     * stamp-keyed path is the freshness contract. */
   private[graft] def storedVerifiedPairs(s: SparkSession, d: String): DataFrame =
-    storedTable(s, storeDir(d, "pairs")) {
+    Store.storedTable(s, Store.dir(Store.Dedup, d, "pairs")) {
       minhashEstimates(s, d)
         .filter(col("n_match") >= lit(VerifyMatchMin))
         .select(col("a_id"), col("b_id"), col("n_match"), col("jaccard_est"))
@@ -888,7 +488,8 @@ object Dedup {
     * for the next consumer). Labels are component-minimum doc_ids —
     * identical to [[clustersSig]]'s by construction. */
   private[graft] def storedClusterLabels(s: SparkSession, d: String): DataFrame =
-    storedTable(s, storeDir(d, "labels"), upstream = Seq(storeDir(d, "pairs"))) {
+    Store.storedTable(s, Store.dir(Store.Dedup, d, "labels"),
+        upstream = Seq(Store.dir(Store.Dedup, d, "pairs"))) {
       connectedComponentsStar(
         Tables.documents(s, d).select(col("doc_id")),
         storedVerifiedPairs(s, d).select(col("a_id"), col("b_id")))
@@ -903,7 +504,8 @@ object Dedup {
     * would enumerate — band-key candidacy is pairwise, so the presence
     * of new docs in a bucket never adds or removes an old×old pair. */
   private[graft] def storedOldClusterLabels(s: SparkSession, d: String): DataFrame =
-    storedTable(s, storeDir(d, "oldlabels"), upstream = Seq(storeDir(d, "pairs"))) {
+    Store.storedTable(s, Store.dir(Store.Dedup, d, "oldlabels"),
+        upstream = Seq(Store.dir(Store.Dedup, d, "pairs"))) {
       val isOld = (c: Column) => pmod(c, lit(NewBatchMod)) =!= NewBatchMod - 1
       connectedComponentsStar(
         Tables.documents(s, d).select(col("doc_id"))
@@ -1351,7 +953,7 @@ object Dedup {
     * ever tokenized and hashed; every later generation reads or
     * hard-links these files. */
   private[graft] def storedDay0Sigs(s: SparkSession, d: String): DataFrame =
-    storedTable(s, storeDir(d, "d0sigs")) {
+    Store.storedTable(s, Store.dir(Store.Dedup, d, "d0sigs")) {
       sigBands(docTokens(s, d).filter(!resIs(Day1Res) && !resIs(Day2Res)))
     }
 
@@ -1362,8 +964,8 @@ object Dedup {
     * exactly once. Full [[storedVerifiedPairs]] schema so the day
     * stores substitute column-for-column. */
   private[graft] def storedDay0Pairs(s: SparkSession, d: String): DataFrame =
-    storedTable(s, storeDir(d, "d0pairs"),
-        upstream = Seq(storeDir(d, "d0sigs"))) {
+    Store.storedTable(s, Store.dir(Store.Dedup, d, "d0pairs"),
+        upstream = Seq(Store.dir(Store.Dedup, d, "d0sigs"))) {
       val sigs = storedDay0Sigs(s, d)
       incrementalPairs(sigs.limit(0), sigs)
     }
@@ -1372,8 +974,8 @@ object Dedup {
     * pair STORE (cold-start chaining: sigs → pairs → labels, each
     * materialized once). */
   private[graft] def storedDay0Labels(s: SparkSession, d: String): DataFrame =
-    storedTable(s, storeDir(d, "d0labels"),
-        upstream = Seq(storeDir(d, "d0pairs"))) {
+    Store.storedTable(s, Store.dir(Store.Dedup, d, "d0labels"),
+        upstream = Seq(Store.dir(Store.Dedup, d, "d0pairs"))) {
       connectedComponentsStar(
         Tables.documents(s, d).select(col("doc_id"))
           .filter(!resIs(Day1Res) && !resIs(Day2Res)),
@@ -1388,7 +990,8 @@ object Dedup {
     * day's publish adds files and touches nothing else. */
   private[graft] def storedDay1Sigs(s: SparkSession, d: String): DataFrame = {
     storedDay0Sigs(s, d) // force the base build before linking it
-    storedTableAppend(s, storeDir(d, "d1sigs"), storeDir(d, "d0sigs")) {
+    Store.storedTableAppend(s, Store.dir(Store.Dedup, d, "d1sigs"),
+        Store.dir(Store.Dedup, d, "d0sigs")) {
       sigBands(docTokens(s, d).filter(resIs(Day1Res)))
     }
   }
@@ -1403,7 +1006,8 @@ object Dedup {
     * under ingest — this store is that claim made real. */
   private[graft] def storedDay1Pairs(s: SparkSession, d: String): DataFrame = {
     storedDay0Pairs(s, d) // force the base build before linking it
-    storedTableAppend(s, storeDir(d, "d1pairs"), storeDir(d, "d0pairs")) {
+    Store.storedTableAppend(s, Store.dir(Store.Dedup, d, "d1pairs"),
+        Store.dir(Store.Dedup, d, "d0pairs")) {
       val d1 = storedDay1Sigs(s, d)
       incrementalPairs(d1.filter(!resIs(Day1Res)), d1.filter(resIs(Day1Res)))
     }
@@ -1416,8 +1020,9 @@ object Dedup {
     * filter selects exactly the appended files' rows), the base
     * labels from [[storedDay0Labels]]. */
   private[graft] def storedDay1Labels(s: SparkSession, d: String): DataFrame =
-    storedTable(s, storeDir(d, "d1labels"),
-        upstream = Seq(storeDir(d, "d0labels"), storeDir(d, "d1pairs"))) {
+    Store.storedTable(s, Store.dir(Store.Dedup, d, "d1labels"),
+        upstream = Seq(Store.dir(Store.Dedup, d, "d0labels"),
+          Store.dir(Store.Dedup, d, "d1pairs"))) {
       val touches8 =
         pmod(col("a_id"), lit(NewBatchMod)) === Day1Res ||
           pmod(col("b_id"), lit(NewBatchMod)) === Day1Res
@@ -1433,8 +1038,8 @@ object Dedup {
     * the components batch 9 touches and keeps these rows verbatim for
     * every untouched component. */
   private[graft] def storedDay1Ranks(s: SparkSession, d: String): DataFrame =
-    storedTable(s, storeDir(d, "d1ranks"),
-        upstream = Seq(storeDir(d, "d1pairs"))) {
+    Store.storedTable(s, Store.dir(Store.Dedup, d, "d1ranks"),
+        upstream = Seq(Store.dir(Store.Dedup, d, "d1pairs"))) {
       pagerankLoop(
         Tables.documents(s, d).select(col("doc_id")).filter(!resIs(Day2Res)),
         storedDay1Pairs(s, d).select(col("a_id"), col("b_id")))
@@ -1474,7 +1079,8 @@ object Dedup {
     * refresh work. */
   private[graft] def storedDay2Sigs(s: SparkSession, d: String): DataFrame = {
     storedDay1Sigs(s, d) // force the base build before linking it
-    storedTableAppend(s, storeDir(d, "d2sigs"), storeDir(d, "d1sigs")) {
+    Store.storedTableAppend(s, Store.dir(Store.Dedup, d, "d2sigs"),
+        Store.dir(Store.Dedup, d, "d1sigs")) {
       sigBands(docTokens(s, d).filter(resIs(Day2Res)))
     }
   }
@@ -1487,7 +1093,8 @@ object Dedup {
     * [[storedDay1Pairs]], one generation later. */
   private[graft] def storedDay2Pairs(s: SparkSession, d: String): DataFrame = {
     storedDay1Pairs(s, d) // force the base build before linking it
-    storedTableAppend(s, storeDir(d, "d2pairs"), storeDir(d, "d1pairs")) {
+    Store.storedTableAppend(s, Store.dir(Store.Dedup, d, "d2pairs"),
+        Store.dir(Store.Dedup, d, "d1pairs")) {
       val d2 = storedDay2Sigs(s, d)
       incrementalPairs(d2.filter(!resIs(Day2Res)), d2.filter(resIs(Day2Res)))
     }
@@ -1678,7 +1285,8 @@ object Dedup {
     * SQL, so the driver hash-compare proves stored ≡ recomputed on
     * every verify run. */
   private[graft] def storedPageRanks(s: SparkSession, d: String): DataFrame =
-    storedTable(s, storeDir(d, "ranks"), upstream = Seq(storeDir(d, "pairs"))) {
+    Store.storedTable(s, Store.dir(Store.Dedup, d, "ranks"),
+        upstream = Seq(Store.dir(Store.Dedup, d, "pairs"))) {
       pagerankRanks(s, d)
     }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Det
-import graft.io.Tables
+import graft.io.{Store, Tables}
 
 /** Text-analysis operators for the LLM-data-pipeline surface
   * (SURVEY.md §2.J + driver-mandated extensions: language ID, quality
@@ -127,7 +127,7 @@ object Text {
     * verdict #6): day-0 (doc_id % 10 < 8, 80%) is tokenized and
     * TF-counted ONCE and published through the locked store layer;
     * day-1's batch (== 8, 10%) and then day-2's (== 9, 10%) are each
-    * published by hard-link APPEND ([[Dedup.storedTableAppend]] —
+    * published by hard-link APPEND ([[Store.storedTableAppend]] —
     * every prior generation's part files linked, only the day's batch
     * tokenized; day-0's files are linked TWICE removed in tf2, the
     * inode receipt the spec checks). At 100 TB tokenization IS the
@@ -136,24 +136,17 @@ object Text {
     * (df counts, scoring, containment) reads instead of re-tokenizing
     * history, and per-day cost stays O(|day's docs|) regardless of
     * chain depth. */
-  /** TF-family store version — defined in [[Dedup.TfStoreVersion]]
-    * beside the store machinery so the legacy sweep can age out
-    * superseded tf tags (round-13 ADVICE); composed into the KIND so
-    * a TF bump never invalidates the dedup family's stores and vice
-    * versa. */
-  private def tfKind(day: Int): String = s"tf$day.t${Dedup.TfStoreVersion}"
-
   private[graft] def storedTfDay(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    Dedup.storedTable(s, Dedup.storeDir(d, tfKind(0))) {
+    Store.storedTable(s, Store.dir(Store.Tf, d, "tf0")) {
       tfCounts(docs.filter(pmod(col("doc_id"), lit(10)) < 8))
     }
-    Dedup.storedTableAppend(s, Dedup.storeDir(d, tfKind(1)),
-        Dedup.storeDir(d, tfKind(0))) {
+    Store.storedTableAppend(s, Store.dir(Store.Tf, d, "tf1"),
+        Store.dir(Store.Tf, d, "tf0")) {
       tfCounts(docs.filter(pmod(col("doc_id"), lit(10)) === 8))
     }
-    Dedup.storedTableAppend(s, Dedup.storeDir(d, tfKind(2)),
-        Dedup.storeDir(d, tfKind(1))) {
+    Store.storedTableAppend(s, Store.dir(Store.Tf, d, "tf2"),
+        Store.dir(Store.Tf, d, "tf1")) {
       tfCounts(docs.filter(pmod(col("doc_id"), lit(10)) === 9))
     }
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Det
-import graft.io.Tables
+import graft.io.{Store, Tables}
 
 /** Vector-similarity operators (SURVEY.md §2.J): brute-force cosine
   * top-k (correctness baseline), sign-bit LSH bucketed ANN (the scale
@@ -922,92 +922,23 @@ object Vectors {
     * search actually costs once the index exists. Same freshness
     * mechanism as [[Dedup.storedCorpusSigs]]: the filesystem stamp
     * keys the store path (regenerating the fixture forces a rebuild
-    * with no data read), `_SUCCESS` of the LAST-written table gates
-    * readability. Override the root with SPARK_GRAFT_PQ_STORE. */
+    * with no data read); codebook and codes are two stores, the codes
+    * receipted against the codebook. */
   private[graft] def storedPqIndex(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val dir = pqIndexDir(d)
     val book = storedPqBook(s, d)
-    // Dedup.storedTable = the hardened store layer (FileLock'd atomic
-    // publish + _UPSTREAM coherence receipt); codes derive from the
-    // READ-BACK codebook so the two stored tables cannot drift even
-    // across a concurrent rebuild
-    val codes = Dedup.storedTable(s, s"$dir/codes",
-        upstream = Seq(s"$dir/codebook")) {
+    // codes derive from the READ-BACK codebook so the two stored
+    // tables cannot drift even across a concurrent rebuild
+    val codes = Store.storedTable(s, Store.dir(Store.Pq, d, "codes"),
+        upstream = Seq(Store.dir(Store.Pq, d, "codebook"))) {
       pqCodes(corpus(s, d), book).select(col("vec_id"), col("j"), col("code"))
     }
     (book, codes)
   }
 
-  /** PQ-family store version, composed beside the shared
-    * [[Dedup.StoreFormatVersion]] in every PQ store path: bump THIS
-    * when a PQ/IVF builder changes, without invalidating the other
-    * families' stores (round-13 ADVICE). */
-  // p2: map-side coding + stored IVF tables (coarse/ivfcodes added;
-  // codes must be provably rebuilt by the array-expression coder).
-  // p3: corpus-derived geometry (ncells = ⌈√n⌉, derived nprobe) and
-  // SAMPLED training in every stored builder (codebook, coarse,
-  // resbook) — all stored contents change.
-  // p4: ivfcodes/rescodes hive-partitioned by cell (physical layout
-  // pruning for the probed-cell scan) — dir layout changes.
-  // p5: partitioned stores cluster on cell before writing (one file
-  // per cell instead of one per task×cell — the p4 layout's ~1400
-  // tiny files read 2× slower than flat at fixture scale).
-  // p6: partitioned publishes carry the _CELLS partition-universe
-  // sidecar (Dedup.CellsMarker) and long-typed read-back — the
-  // plan-time cell resolve reads the sidecar instead of listing.
-  private[graft] val PqStoreVersion = 8
-
-  /** One-time (per JVM) sweep of PQ store dirs carrying a superseded
-    * family version (`.pM-` with M ≠ [[PqStoreVersion]]): they are
-    * rebuilt under the new token and would otherwise accumulate stale
-    * parquet forever (the Dedup.legacySwept tf-tag precedent). Runs
-    * ONLY against the built-in /tmp default — an explicit
-    * SPARK_GRAFT_PQ_STORE may hold a store a concurrent older-code
-    * JVM is mid-read of — and AGE-GATED to dirs untouched for
-    * [[SweepGraceMs]] (round-15 ADVICE: even under the default root,
-    * a concurrent older-code JVM may be mid-read of a store it just
-    * published; a superseded-version dir that old code is actively
-    * using is recent by construction, so the grace window protects
-    * it while still clearing multi-day leftovers). Best-effort,
-    * never fatal. */
-  private val SweepGraceMs = 6L * 3600 * 1000
-  private lazy val pqLegacySwept: Unit =
-    if (sys.env.contains("SPARK_GRAFT_PQ_STORE")) ()
-    else {
-      val tag = """\.p(\d+)-""".r
-      def rmAll(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.foreach(rmAll)
-        f.delete(); ()
-      }
-      val cutoff = System.currentTimeMillis() - SweepGraceMs
-      try Option(new java.io.File("/tmp/graft-pq-store").listFiles())
-        .toSeq.flatten
-        .filter { f =>
-          f.isDirectory && !f.getName.contains(".tmp-") &&
-            f.lastModified() < cutoff &&
-            tag.findFirstMatchIn(f.getName)
-              .exists(_.group(1).toInt != PqStoreVersion)
-        }.foreach(rmAll)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
-
-  /** Root dir of the flat PQ index store for fixture `d`.
-    * "t" prefix: see Dedup.storeDir — a leading "_" marks the dir
-    * hidden to Hadoop's listing filter. The -vN.pM- token keys CODE
-    * freshness (shared machinery + PQ-family builders), the stamp
-    * DATA freshness — same contract as Dedup.storeDir. */
-  private def pqIndexDir(d: String): String = {
-    pqLegacySwept
-    val root = sys.env.getOrElse("SPARK_GRAFT_PQ_STORE", "/tmp/graft-pq-store")
-    s"$root/t${d.replaceAll("[^A-Za-z0-9._-]", "_")}-" +
-      s"v${Dedup.StoreFormatVersion}.p$PqStoreVersion-" +
-      Dedup.fsStamp(s"$d/embeddings.parquet")
-  }
-
   /** The stored flat-PQ codebook — shared by [[storedPqIndex]] and
     * [[storedIvfPqIndex]] (one training, two index layouts). */
   private[graft] def storedPqBook(s: SparkSession, d: String): DataFrame =
-    Dedup.storedTable(s, s"${pqIndexDir(d)}/codebook") {
+    Store.storedTable(s, Store.dir(Store.Pq, d, "codebook")) {
       // OFFLINE BUILDS TRAIN SAMPLED (the annPqSampled recipe: the
       // deterministic 25% hash sample ∪ the PqK seeds) — the builder's
       // own sf1 measurement says full-corpus Lloyd is ~3.5× the cost
@@ -1018,18 +949,6 @@ object Vectors {
       pqCodebook(corpus(s, d)
         .filter(trainSample(col("vec_id")) || col("vec_id") < PqK), PqRounds)
     }
-
-  /** Flat store path for one table of the DAY-CHAINED PQ index —
-    * Dedup.storeDir's exact naming contract (version token = CODE
-    * freshness, content stamp = DATA freshness) over the embeddings
-    * table and the PQ store root. */
-  private def pqStoreDir(d: String, kind: String): String = {
-    pqLegacySwept
-    val root = sys.env.getOrElse("SPARK_GRAFT_PQ_STORE", "/tmp/graft-pq-store")
-    s"$root/t${d.replaceAll("[^A-Za-z0-9._-]", "_")}-$kind-" +
-      s"v${Dedup.StoreFormatVersion}.p$PqStoreVersion-" +
-      Dedup.fsStamp(s"$d/embeddings.parquet")
-  }
 
   /** Day-chain ingest split: vectors with `vec_id % Day2Mod >=
     * Day2NewMin` are "tomorrow's" batch (10%), the rest is the day-0
@@ -1042,7 +961,7 @@ object Vectors {
     * multi-day store chain: day-0 trains the codebook and codes its
     * own corpus ONCE (both stored); day-1's batch is coded with the
     * FROZEN day-0 codebook and published by hard-link APPEND
-    * (Dedup.storedTableAppend — day-0 part files linked, only batch
+    * (Store.storedTableAppend — day-0 part files linked, only batch
     * rows written, zero recompute of the base). This is how every
     * production ANN index ingests: retraining the codebook on each
     * batch would re-code the entire corpus (an O(corpus) daily
@@ -1054,16 +973,16 @@ object Vectors {
                                       d: String): (DataFrame, DataFrame) = {
     val c = corpus(s, d)
     val isDay0 = pmod(col("vec_id"), lit(Day2Mod)) < Day2NewMin
-    val bookDir = pqStoreDir(d, "d0book")
-    val d0Dir = pqStoreDir(d, "d0codes")
-    val book = Dedup.storedTable(s, bookDir) {
+    val bookDir = Store.dir(Store.Pq, d, "d0book")
+    val d0Dir = Store.dir(Store.Pq, d, "d0codes")
+    val book = Store.storedTable(s, bookDir) {
       pqCodebook(c.filter(isDay0), PqRounds)
     }
-    Dedup.storedTable(s, d0Dir, upstream = Seq(bookDir)) {
+    Store.storedTable(s, d0Dir, upstream = Seq(bookDir)) {
       pqCodes(c.filter(isDay0), book)
         .select(col("vec_id"), col("j"), col("code"))
     }
-    val codes = Dedup.storedTableAppend(s, pqStoreDir(d, "d1codes"), d0Dir) {
+    val codes = Store.storedTableAppend(s, Store.dir(Store.Pq, d, "d1codes"), d0Dir) {
       pqCodes(c.filter(!isDay0), book)
         .select(col("vec_id"), col("j"), col("code"))
     }
@@ -1293,17 +1212,17 @@ object Vectors {
   private[graft] def storedIvfPqIndex(s: SparkSession,
                                       d: String): (DataFrame, DataFrame, DataFrame) = {
     val c = corpus(s, d)
-    val bookDir = s"${pqIndexDir(d)}/codebook"
-    val coarseDir = pqStoreDir(d, "coarse")
+    val bookDir = Store.dir(Store.Pq, d, "codebook")
+    val coarseDir = Store.dir(Store.Pq, d, "coarse")
     val book = storedPqBook(s, d)
-    val coarse = Dedup.storedTable(s, coarseDir) {
+    val coarse = Store.storedTable(s, coarseDir) {
       // sampled Lloyd membership (seeds always included) — the
       // offline-build economics storedPqBook documents; ncells still
       // derives from the FULL corpus count.
       kmeansCentroids(c, rounds = 3,
         trainWhere = Some(trainSample(col("vec_id"))))
     }
-    val ccodes = Dedup.storedTable(s, pqStoreDir(d, "ivfcodes"),
+    val ccodes = Store.storedTable(s, Store.dir(Store.Pq, d, "ivfcodes"),
         upstream = Seq(coarseDir, bookDir),
         // hive-partitioned inverted lists: a search probing nprobe of
         // ncells cells scans only those cells' files — the physical
@@ -1326,7 +1245,7 @@ object Vectors {
     val (coarse, book, ccodes) = storedIvfPqIndex(s, d)
     rankPerProbe(
         ivfpqScores(c, coarse, book, ccodes,
-          pruneDir = Some(pqStoreDir(d, "ivfcodes"))),
+          pruneDir = Some(Store.dir(Store.Pq, d, "ivfcodes"))),
         lit(3), col("adist").asc, col("vec_id").asc)
       .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
         col("adist"))
@@ -1348,7 +1267,7 @@ object Vectors {
     val (coarse, book, ccodes) = storedIvfPqIndex(s, d)
     rankPerProbe(
         ivfpqScores(c, coarse, book, ccodes, cellsPerProbe,
-          pruneDir = if (prune) Some(pqStoreDir(d, "ivfcodes")) else None,
+          pruneDir = if (prune) Some(Store.dir(Store.Pq, d, "ivfcodes")) else None,
           probeMax = probeMax),
         lit(3), col("adist").asc, col("vec_id").asc)
       .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
@@ -1492,10 +1411,8 @@ object Vectors {
     // O(|universe| × |cells|) (round-16 ADVICE — cells may hold up to
     // MaxResolvedCells entries, making the linear-scan form quadratic)
     val cellSet = cells.toSet
-    Dedup.storedPartValues(storeDir) match {
-      case Some(all) if all.forall(cellSet.contains) => ccodes
-      case _ => ccodes.filter(col("cell").isin(cells: _*))
-    }
+    if (Store.storedPartValues(storeDir).forall(cellSet.contains)) ccodes
+    else ccodes.filter(col("cell").isin(cells: _*))
   }
 
   private val annIvfPqResidual: Q = (s, d) => {
@@ -1524,9 +1441,9 @@ object Vectors {
   private[graft] def storedIvfPqResidualIndex(
       s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val c = corpus(s, d)
-    val coarseDir = pqStoreDir(d, "coarse")
-    val resBookDir = pqStoreDir(d, "resbook")
-    val coarse = Dedup.storedTable(s, coarseDir) {
+    val coarseDir = Store.dir(Store.Pq, d, "coarse")
+    val resBookDir = Store.dir(Store.Pq, d, "resbook")
+    val coarse = Store.storedTable(s, coarseDir) {
       // SHARED with storedIvfPqIndex — one coarse store, one training
       // discipline (sampled membership, full-corpus ncells), so the
       // two index families can never read incoherent cells.
@@ -1538,13 +1455,13 @@ object Vectors {
     // warm-store read never computes it at all (round-13 ADVICE: the
     // double residualFrame call paid the cell-assignment pass twice).
     lazy val rf = residualFrame(c, coarse)
-    val book = Dedup.storedTable(s, resBookDir, upstream = Seq(coarseDir)) {
+    val book = Store.storedTable(s, resBookDir, upstream = Seq(coarseDir)) {
       // sampled residual-book training, the storedPqBook discipline
       pqCodebook(rf
         .filter(trainSample(col("vec_id")) || col("vec_id") < PqK)
         .select(col("vec_id"), col("res").as("emb")), PqRounds)
     }
-    val ccodes = Dedup.storedTable(s, pqStoreDir(d, "rescodes"),
+    val ccodes = Store.storedTable(s, Store.dir(Store.Pq, d, "rescodes"),
         upstream = Seq(coarseDir, resBookDir),
         // same cell-partitioned layout as the raw ivfcodes store —
         // the rerank path's code scan prunes to the probed cells
@@ -1564,7 +1481,7 @@ object Vectors {
     val (coarse, book, ccodes) = storedIvfPqResidualIndex(s, d)
     rankPerProbe(
         residualScores(c, coarse, book, ccodes,
-          pruneDir = Some(pqStoreDir(d, "rescodes"))),
+          pruneDir = Some(Store.dir(Store.Pq, d, "rescodes"))),
         lit(3), col("adist").asc, col("vec_id").asc)
       .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
         col("adist"))
@@ -1750,10 +1667,10 @@ object Vectors {
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
     val c = corpus(s, d)
     val (coarse, book, ccodes) = storedIvfPqIndex(s, d)
-    val coarseDir = pqStoreDir(d, "coarse")
-    val codesDir = pqStoreDir(d, "ivfcodes")
-    val scentsDir = pqStoreDir(d, "splitcents")
-    val scents = Dedup.storedTable(s, scentsDir,
+    val coarseDir = Store.dir(Store.Pq, d, "coarse")
+    val codesDir = Store.dir(Store.Pq, d, "ivfcodes")
+    val scentsDir = Store.dir(Store.Pq, d, "splitcents")
+    val scents = Store.storedTable(s, scentsDir,
         upstream = Seq(coarseDir, codesDir)) {
       val members = hotMembers(c, coarse, ccodes).localCheckpoint()
       val w = Window.partitionBy(col("pcell")).orderBy(col("vec_id").asc)
@@ -1796,7 +1713,7 @@ object Vectors {
           col("c_emb"), col("c_nrm"))
         .unionByName(children)
     }
-    val scodes = Dedup.storedTable(s, pqStoreDir(d, "splitcodes"),
+    val scodes = Store.storedTable(s, Store.dir(Store.Pq, d, "splitcodes"),
         upstream = Seq(scentsDir, codesDir),
         partitionBy = Seq("cell")) {
       // final child assignment comes from the PUBLISHED child book —
@@ -1861,13 +1778,10 @@ object Vectors {
       resolvedCellsMemo.clear()
     val parents = resolvedCellsMemo.computeIfAbsent(
       s"$storeDir#$memoTag", _ => resolveProbeCells(probeCells)).toSet
-    Dedup.storedPartValues(storeDir) match {
-      case Some(all) =>
-        val children = all.filter(v => parents.contains(v / SplitBase))
-        if (children.size == all.size) scodes
-        else scodes.filter(col("cell").isin(children: _*))
-      case None => scodes // no sidecar: the parent equi-join still prunes
-    }
+    val all = Store.storedPartValues(storeDir)
+    val children = all.filter(v => parents.contains(v / SplitBase))
+    if (children.size == all.size) scodes
+    else scodes.filter(col("cell").isin(children: _*))
   }
 
   /** Search over the SPLIT index, two geometries:
@@ -1904,7 +1818,7 @@ object Vectors {
       .join(broadcast(book), Seq("j"))
       .select(col("probe_id"), col("cell").as("lcell"), col("j").as("lj"),
         col("cent_id").as("lc"), Det.qi4(d2(col("sv"), col("cv"))).as("pd2"))
-    val storeDir = pqStoreDir(d, "splitcodes")
+    val storeDir = Store.dir(Store.Pq, d, "splitcodes")
     val tag = s"split#$childProbe#$cellsPerProbe#$probeMax"
     val pruned =
       if (!prune) scodes
@@ -2070,14 +1984,14 @@ object Vectors {
   private[graft] def storedIvfSq8Index(
       s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val c = corpus(s, d)
-    val coarseDir = pqStoreDir(d, "coarse")
-    val statsDir = pqStoreDir(d, "sq8stats")
-    val coarse = Dedup.storedTable(s, coarseDir) {
+    val coarseDir = Store.dir(Store.Pq, d, "coarse")
+    val statsDir = Store.dir(Store.Pq, d, "sq8stats")
+    val coarse = Store.storedTable(s, coarseDir) {
       kmeansCentroids(c, rounds = 3,
         trainWhere = Some(trainSample(col("vec_id"))))
     }
-    val stats = Dedup.storedTable(s, statsDir) { sq8StatRows(c) }
-    val codes = Dedup.storedTable(s, pqStoreDir(d, "sq8codes"),
+    val stats = Store.storedTable(s, statsDir) { sq8StatRows(c) }
+    val codes = Store.storedTable(s, Store.dir(Store.Pq, d, "sq8codes"),
         upstream = Seq(coarseDir, statsDir),
         partitionBy = Seq("cell")) {
       withNearestCentroid(c, coarse, col("emb"), col("nrm"))
@@ -2129,7 +2043,7 @@ object Vectors {
     val (coarse, stats, codes) = storedIvfSq8Index(s, d)
     rankPerProbe(
         ivfSq8Scores(c, coarse, stats, codes,
-          pruneDir = Some(pqStoreDir(d, "sq8codes"))),
+          pruneDir = Some(Store.dir(Store.Pq, d, "sq8codes"))),
         lit(3), col("qdist").asc, col("vec_id").asc)
       .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
         col("qdist"))
@@ -2165,13 +2079,13 @@ object Vectors {
       : (DataFrame, DataFrame, DataFrame) = {
     val c = corpus(s, d)
     val isDay0 = pmod(col("vec_id"), lit(Day2Mod)) < Day2NewMin
-    val coarseDir = pqStoreDir(d, "sq8d0coarse")
-    val statsDir = pqStoreDir(d, "sq8d0stats")
-    val d0Dir = pqStoreDir(d, "sq8d0codes")
-    val coarse = Dedup.storedTable(s, coarseDir) {
+    val coarseDir = Store.dir(Store.Pq, d, "sq8d0coarse")
+    val statsDir = Store.dir(Store.Pq, d, "sq8d0stats")
+    val d0Dir = Store.dir(Store.Pq, d, "sq8d0codes")
+    val coarse = Store.storedTable(s, coarseDir) {
       kmeansCentroids(c, rounds = 3, trainWhere = Some(isDay0))
     }
-    val stats = Dedup.storedTable(s, statsDir) {
+    val stats = Store.storedTable(s, statsDir) {
       sq8StatRows(c.filter(isDay0))
     }
     def codesOf(rows: DataFrame): DataFrame =
@@ -2179,11 +2093,11 @@ object Vectors {
         .crossJoin(broadcast(sq8Fold(stats)))
         .select(col("vec_id"), sq8Code(col("emb")).as("q"),
           col("cent_id").as("cell"))
-    Dedup.storedTable(s, d0Dir, upstream = Seq(coarseDir, statsDir),
+    Store.storedTable(s, d0Dir, upstream = Seq(coarseDir, statsDir),
         partitionBy = Seq("cell")) {
       codesOf(c.filter(isDay0))
     }
-    val codes = Dedup.storedTableAppend(s, pqStoreDir(d, "sq8d1codes"),
+    val codes = Store.storedTableAppend(s, Store.dir(Store.Pq, d, "sq8d1codes"),
         d0Dir, partitionBy = Seq("cell")) {
       codesOf(c.filter(!isDay0))
     }
@@ -2202,7 +2116,7 @@ object Vectors {
     val (coarse, stats, codes) = storedIvfSq8DayIndex(s, d)
     rankPerProbe(
         ivfSq8Scores(c, coarse, stats, codes,
-          pruneDir = Some(pqStoreDir(d, "sq8d1codes"))),
+          pruneDir = Some(Store.dir(Store.Pq, d, "sq8d1codes"))),
         lit(3), col("qdist").asc, col("vec_id").asc)
       .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
         col("qdist"))
@@ -2220,7 +2134,7 @@ object Vectors {
     val (coarse, stats, codes) = storedIvfSq8Index(s, d)
     rankPerProbe(
         ivfSq8Scores(c, coarse, stats, codes, cellsPerProbe,
-          pruneDir = if (prune) Some(pqStoreDir(d, "sq8codes")) else None,
+          pruneDir = if (prune) Some(Store.dir(Store.Pq, d, "sq8codes")) else None,
           probeMax = probeMax),
         lit(3), col("qdist").asc, col("vec_id").asc)
       .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
@@ -2244,7 +2158,7 @@ object Vectors {
         val (coarse, book, ccodes) = storedIvfPqIndex(s, d)
         val shortlist = rankPerProbe(
             ivfpqScores(c, coarse, book, ccodes, cellsPerProbe,
-              pruneDir = Some(pqStoreDir(d, "ivfcodes")))
+              pruneDir = Some(Store.dir(Store.Pq, d, "ivfcodes")))
               .crossJoin(broadcast(rerankClim(c, cFactor))),
             col("c_lim"), col("adist").asc, col("vec_id").asc)
           .select(col("probe_id"), col("vec_id"))
@@ -2253,7 +2167,7 @@ object Vectors {
         val (coarse, book, ccodes) = storedIvfPqResidualIndex(s, d)
         val shortlist = rankPerProbe(
             residualScores(c, coarse, book, ccodes, cellsPerProbe,
-              pruneDir = Some(pqStoreDir(d, "rescodes")))
+              pruneDir = Some(Store.dir(Store.Pq, d, "rescodes")))
               .crossJoin(broadcast(rerankClim(c, cFactor))),
             col("c_lim"), col("adist").asc, col("vec_id").asc)
           .select(col("probe_id"), col("vec_id"))
@@ -2262,7 +2176,7 @@ object Vectors {
         val (coarse, stats, codes) = storedIvfSq8Index(s, d)
         val shortlist = rankPerProbe(
             ivfSq8Scores(c, coarse, stats, codes, cellsPerProbe,
-              pruneDir = Some(pqStoreDir(d, "sq8codes")))
+              pruneDir = Some(Store.dir(Store.Pq, d, "sq8codes")))
               .crossJoin(broadcast(rerankClim(c, cFactor))),
             col("c_lim"), col("qdist").asc, col("vec_id").asc)
           .select(col("probe_id"), col("vec_id"))

@@ -4,6 +4,7 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
+import scala.util.control.NonFatal
 
 /** Per-key optimization probe: runs declared keys with a listener that
   * attributes wall time to jobs/stages, so "where do the seconds go"
@@ -57,7 +58,7 @@ object ProbeKey {
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
       keys.foreach { k =>
         try { SparkEntryRef(k)(spark, warmDir).count() }
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
 
     keys.foreach { key =>

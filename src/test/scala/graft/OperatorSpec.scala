@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.io.Store
 
 /** Per-operator sanity on sf0.001: every declared query runs, returns
   * rows (or a known-empty result), and module-specific invariants hold.
@@ -11,6 +12,13 @@ import org.scalatest.funsuite.AnyFunSuite
 class OperatorSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf
+
+  /** The test fixture's store dir of `kind`, asserted published. */
+  private def publishedStore(family: Store.Family, kind: String): java.io.File = {
+    val f = new java.io.File(Store.dir(family, sf, kind))
+    assert(new java.io.File(f, "_SUCCESS").exists(), s"no published $kind store")
+    f
+  }
 
   // q_join_anti: at sf0.001 every customer has orders → legitimately empty
   private val mayBeEmpty =
@@ -452,7 +460,7 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("pq day-chain: frozen codebook, hard-link append, reuse receipts") {
-    import graft.ops.{Dedup, Vectors}
+    import graft.ops.Vectors
     val (book, codes) = Vectors.storedPqDayIndex(spark, sf)
     // the stored codebook is the DAY-0-trained one, bit-for-bit — the
     // day-1 ingest froze it instead of retraining
@@ -467,28 +475,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(codes.count() == c.count() * 8, "day-1 code table incomplete")
     // append proof: every day-0 part file appears in the day-1 store
     // as a HARD LINK (same file key/inode) — day-0 was never re-coded
-    val root = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_PQ_STORE", "/tmp/graft-pq-store"))
-    def store(kind: String): java.io.File = {
-      // the PQ family composes its own version beside the shared token
-      // (-vN.pM-): match the engine's EXACT current composition, or a
-      // leftover store from an older version would satisfy the lookup
-      // (this bit a fresh machine: the old "-$kind-vN-" token matched
-      // nothing current and only ever passed against stale dirs)
-      val tok =
-        s"-$kind-v${Dedup.StoreFormatVersion}.p${Vectors.PqStoreVersion}-"
-      // ... AND the current fixture's content stamp: a same-version dir
-      // left by an older fixture generation is not aged out by the
-      // legacy sweep and would otherwise make this lookup ambiguous
-      // ("expected one ... got 2") on long-lived machines
-      val stamp = Dedup.fsStamp(s"$sf/embeddings.parquet")
-      val ds = Option(root.listFiles()).toSeq.flatten
-        .filter(f => f.getName.contains("sf0.001") &&
-          f.getName.contains(tok) && f.getName.endsWith(s"-$stamp") &&
-          !f.getName.contains(".tmp-") && !f.getName.endsWith(".lock"))
-      assert(ds.size == 1, s"expected one $kind store, got ${ds.map(_.getName)}")
-      ds.head
-    }
+    def store(kind: String) = publishedStore(Store.Pq, kind)
     def fileKey(f: java.io.File) =
       java.nio.file.Files.readAttributes(f.toPath,
         classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()
@@ -855,13 +842,8 @@ class OperatorSpec extends AnyFunSuite {
       "stored-table formulation diverged from the in-query one")
     // a second invocation must READ the store, never rebuild it: the
     // _SUCCESS marker's mtime is the build receipt
-    val root = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_SIG_STORE", "/tmp/graft-sig-store"))
-    val markers = Option(root.listFiles()).toSeq.flatten
-      .filter(_.getName.contains("sf0.001"))
-      .map(dd => new java.io.File(dd, "_SUCCESS")).filter(_.exists())
-    assert(markers.nonEmpty, "no signature store was materialized")
-    val marker = markers.maxBy(_.lastModified)
+    val marker = new java.io.File(Store.dir(Store.Dedup, sf, "oldsigs"), "_SUCCESS")
+    assert(marker.exists(), "no signature store was materialized")
     val t0 = marker.lastModified
     SparkEntry.queries("q_dedup_incremental_stored")(spark, sf).count()
     assert(marker.lastModified == t0, "store was rebuilt on re-run")
@@ -875,13 +857,9 @@ class OperatorSpec extends AnyFunSuite {
       "stored-label clusters diverged from the in-query lineage")
     // … and a re-run of every stored-lineage consumer must READ the
     // pair/label stores, never rebuild them (_SUCCESS mtime receipts)
-    val root = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_SIG_STORE", "/tmp/graft-sig-store"))
-    val markers = Option(root.listFiles()).toSeq.flatten
-      .filter(f => f.getName.contains("sf0.001") &&
-        (f.getName.contains("-pairs-") || f.getName.contains("-labels-") ||
-         f.getName.contains("-oldlabels-") || f.getName.contains("-ranks-")))
-      .map(dd => new java.io.File(dd, "_SUCCESS")).filter(_.exists())
+    val markers = Seq("pairs", "labels", "oldlabels", "ranks")
+      .map(k => new java.io.File(Store.dir(Store.Dedup, sf, k), "_SUCCESS"))
+      .filter(_.exists())
     assert(markers.size >= 2, s"pair/label stores missing: ${markers.size}")
     val receipts = markers.map(m => m.getPath -> m.lastModified).toMap
     SparkEntry.queries("q_dedup_clusters_stored")(spark, sf).count()
@@ -900,19 +878,7 @@ class OperatorSpec extends AnyFunSuite {
     assert(full.exceptAll(day2).count() == 0 &&
       day2.exceptAll(full).count() == 0,
       "chained day-2 labels diverged from the one-shot full recompute")
-    val root = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_SIG_STORE", "/tmp/graft-sig-store"))
-    def store(kind: String): java.io.File = {
-      // pin to the CURRENT format version: older -vN- dirs may linger
-      // (the legacy sweep only removes pre-versioned layouts)
-      val tok = s"-$kind-v${Dedup.StoreFormatVersion}-"
-      val ds = Option(root.listFiles()).toSeq.flatten
-        .filter(f => f.getName.contains("sf0.001") &&
-          f.getName.contains(tok) && !f.getName.contains(".tmp-") &&
-          !f.getName.endsWith(".lock"))
-      assert(ds.size == 1, s"expected one $kind store, got ${ds.map(_.getName)}")
-      ds.head
-    }
+    def store(kind: String) = publishedStore(Store.Dedup, kind)
     // rank refresh: per-component day-2 refresh ≡ full five-round
     // recompute, and untouched components carry their day-1 rank rows
     // VERBATIM (this PageRank decomposes per component)
@@ -966,14 +932,8 @@ class OperatorSpec extends AnyFunSuite {
   test("store coherence guard: a corrupted upstream receipt refuses to read") {
     import graft.ops.Dedup
     Dedup.storedDay1Labels(spark, sf).count() // ensure published
-    val root = new java.io.File(
-      sys.env.getOrElse("SPARK_GRAFT_SIG_STORE", "/tmp/graft-sig-store"))
-    val dir = Option(root.listFiles()).toSeq.flatten
-      .filter(f => f.getName.contains("sf0.001") &&
-        f.getName.contains(s"-d1labels-v${Dedup.StoreFormatVersion}-") &&
-        !f.getName.contains(".tmp-") &&
-        !f.getName.endsWith(".lock")).head
-    val marker = new java.io.File(dir, graft.ops.Dedup.UpstreamMarker)
+    val marker = new java.io.File(Store.dir(Store.Dedup, sf, "d1labels"),
+      Store.UpstreamMarker)
     val orig = java.nio.file.Files.readAllBytes(marker.toPath)
     try {
       java.nio.file.Files.write(marker.toPath,
@@ -1885,12 +1845,9 @@ class OperatorSpec extends AnyFunSuite {
       "stored-index ADC diverged from in-query sampled-trained ADC")
     // second run must READ the store, not rebuild it: the receipt's
     // mtime is the witness (the incremental_stored precedent)
-    val root = sys.env.getOrElse("SPARK_GRAFT_PQ_STORE", "/tmp/graft-pq-store")
-    def receipt: Option[Long] = {
-      val dirs = Option(new java.io.File(root).listFiles()).toSeq.flatten
-      dirs.map(d => new java.io.File(d, "codes/_SUCCESS"))
-        .filter(_.exists()).map(_.lastModified()).sorted.lastOption
-    }
+    def receipt: Option[Long] =
+      Some(new java.io.File(Store.dir(Store.Pq, sf, "codes"), "_SUCCESS"))
+        .filter(_.exists()).map(_.lastModified())
     val before = receipt
     assert(before.nonEmpty, "no stored PQ index receipt after first run")
     SparkEntry.queries("q_sim_ann_pq_stored")(spark, sf).count()
@@ -1907,11 +1864,8 @@ class OperatorSpec extends AnyFunSuite {
     assert(snap.groupBy(col("user_id")).count().filter(col("count") > 1)
       .count() == 0, "day-0 snapshot holds duplicate keys")
     // re-run READS the published snapshot (mtime receipt)
-    val root = sys.env.getOrElse("SPARK_GRAFT_CDC_STORE", "/tmp/graft-cdc-store")
-    val markers = Option(new java.io.File(root).listFiles()).toSeq.flatten
-      .filter(f => f.getName.contains("sf0.001") && f.getName.contains("-snap0-")
-        && !f.getName.contains(".tmp-") && !f.getName.endsWith(".lock"))
-      .map(d => new java.io.File(d, "_SUCCESS")).filter(_.exists())
+    val markers = Seq(new java.io.File(Store.dir(Store.Cdc, sf, "snap0"), "_SUCCESS"))
+      .filter(_.exists())
     assert(markers.nonEmpty, "no published snapshot store")
     val before = markers.map(m => m.getPath -> m.lastModified).toMap
     SparkEntry.queries("q_cdc_compact_day2")(spark, sf).count()
@@ -1926,20 +1880,7 @@ class OperatorSpec extends AnyFunSuite {
       full.exceptAll(chained).count() == 0,
       "day-chained TF-IDF diverged from full retokenize")
     // append proof: every tf0 part file appears in tf1 as a HARD LINK
-    val root = sys.env.getOrElse("SPARK_GRAFT_SIG_STORE", "/tmp/graft-sig-store")
-    def store(kind: String): java.io.File = {
-      // the TF family composes its version into the KIND (tf<day>.tN):
-      // match the engine's exact composition (see OperatorSpec's PQ
-      // day-chain note — the bare "-$kind-vN-" token only ever matched
-      // stale pre-family-token dirs)
-      val tok = s"-$kind.t${graft.ops.Dedup.TfStoreVersion}" +
-        s"-v${graft.ops.Dedup.StoreFormatVersion}-"
-      val ds = Option(new java.io.File(root).listFiles()).toSeq.flatten
-        .filter(f => f.getName.contains("sf0.001") && f.getName.contains(tok) &&
-          !f.getName.contains(".tmp-") && !f.getName.endsWith(".lock"))
-      assert(ds.size == 1, s"expected one $kind store, got ${ds.map(_.getName)}")
-      ds.head
-    }
+    def store(kind: String) = publishedStore(Store.Tf, kind)
     def fileKey(f: java.io.File) =
       java.nio.file.Files.readAttributes(f.toPath,
         classOf[java.nio.file.attribute.BasicFileAttributes]).fileKey()

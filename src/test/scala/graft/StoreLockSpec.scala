@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** TRUE multi-process store-publish race (VERDICT r14 ask #5): two
   * SEPARATE JVMs race the same storedTable build+publish. The in-JVM
   * path monitor cannot arbitrate across processes — only the
-  * [[java.nio.channels.FileLock]] in Dedup.publish does — so this is
-  * the one test that exercises the lock the publish contract actually
-  * stands on. Invariants demanded: both contenders exit 0 and read
+  * [[java.nio.channels.FileLock]] in graft.io.Store's publish does — so
+  * this is the one test that exercises the lock the publish contract
+  * actually stands on. Invariants demanded: both contenders exit 0 and read
   * the SAME row count (neither ever saw a half-published store), the
   * root holds exactly ONE published store dir with `_SUCCESS` (the
   * complete store was never deleted by the loser), and no `.tmp-`

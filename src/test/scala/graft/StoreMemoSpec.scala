@@ -32,7 +32,7 @@ class StoreMemoSpec extends AnyFunSuite {
     (1 to 20).foreach { _ =>
       ops.Vectors.storedPqBook(spark.newSession(), sf)
     }
-    val n = ops.Dedup.readMemoSessionCount
+    val n = io.Store.readMemoSessionCount
     assert(n <= 8, s"memo tracks $n sessions — LRU cap not enforced")
   }
 }
