@@ -39,6 +39,30 @@ object Vectors {
   private def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), _ + _)
 
+  /** Cosine of `a`·`b` over their precomputed norms; NULL on a zero norm. */
+  private def cosOf(a: Column, b: Column, na: Column, nb: Column): Column =
+    dot(a, b) / nullif(na * nb, lit(0.0))
+
+  /** Corpus-row vs probe cosine (`emb`/`nrm` against `p_emb`/`p_nrm`). */
+  private def probeCos: Column =
+    cosOf(col("emb"), col("p_emb"), col("nrm"), col("p_nrm"))
+
+  /** The exact cosine scorer: (corpus row, probe) candidate pairs minus
+    * the probe itself, with `cos`. */
+  private def exactCos(cands: DataFrame): DataFrame =
+    cands.filter(col("vec_id") =!= col("probe_id")).withColumn("cos", probeCos)
+
+  /** The probe set every search runs: the first `probeMax` vectors of
+    * `c` (`vec_id < probeMax`), renamed `probe_id`, carrying `cols` —
+    * by default the exact probe vector and its norm. 1 is the
+    * single-query serving geometry the audit tools probe. */
+  private def probes(c: DataFrame, probeMax: Long = 10,
+                     cols: Seq[Column] = probeVec): DataFrame =
+    c.filter(col("vec_id") < probeMax).select(col("vec_id").as("probe_id") +: cols: _*)
+
+  private def probeVec: Seq[Column] =
+    Seq(col("emb").as("p_emb"), col("nrm").as("p_nrm"))
+
   /** Exact per-probe top-k WITHOUT a corpus-sized ranking partition
     * (the q_window_ntile / q_pack_sequences two-level decomposition
     * applied to the ANN rankers): rank first within (map partition,
@@ -64,6 +88,25 @@ object Vectors {
       .filter(col("rn") <= k)
   }
 
+  /** Ranked tail of a distance search: per-probe top-`k` of the
+    * unranked (probe_id, vec_id, `dist`) stream, `dist` ascending,
+    * emitted as-is. Unsorted — registry keys add [[byRank]]. */
+  private def nearest(scores: DataFrame, k: Int, dist: String): DataFrame =
+    rankPerProbe(scores, lit(k), col(dist).asc, col("vec_id").asc)
+      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
+        col(dist))
+
+  /** Ranked tail of a cosine search: per-probe top-`k` by `cos`
+    * descending, emitted as the r4-rounded `cosine`. Unsorted. */
+  private def mostSimilar(scored: DataFrame, k: Int): DataFrame =
+    rankPerProbe(scored, lit(k), col("cos").desc, col("vec_id").asc)
+      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
+        Det.r4(col("cos")).as("cosine"))
+
+  /** The registry keys' output order. */
+  private def byRank(df: DataFrame): DataFrame =
+    df.orderBy(col("probe_id").asc, col("rn").asc)
+
   /** The whole coarse codebook folded into ONE broadcast-able row
     * (cent_id-sorted struct array) — argmin/argmax against it then
     * runs as a pure array expression per corpus row: zero shuffle,
@@ -81,8 +124,7 @@ object Vectors {
     * LAST. */
   private def scoredCents(emb: Column, nrm: Column): Column =
     transform(col("cb"), ct => struct(
-      (dot(emb, ct.getField("c_emb")) /
-        nullif(nrm * ct.getField("c_nrm"), lit(0.0))).as("ccos"),
+      cosOf(emb, ct.getField("c_emb"), nrm, ct.getField("c_nrm")).as("ccos"),
       ct.getField("cent_id").as("cent_id")))
 
   /** argmax by (ccos DESC NULLS LAST, cent_id ASC) over the scored
@@ -110,24 +152,25 @@ object Vectors {
       .withColumn("ccos", col("bc.ccos"))
       .drop("cb", "bc")
 
-  /** The nprobe nearest cells per probe, map-side: sort the scored
-    * codebook array by the same (ccos DESC NULLS LAST, cent_id ASC)
-    * order, slice nprobe, explode — one row per (probe, probed cell),
+  /** The [[probes]] of `c` with their nprobe nearest cells of `cents`,
+    * map-side: sort the scored codebook array by the same
+    * (ccos DESC NULLS LAST, cent_id ASC) order, slice nprobe, explode —
+    * one (probe_id, p_emb, p_nrm, cell) row per (probe, probed cell),
     * no window, no shuffle (the probe set is search-bounded). nprobe
     * is CORPUS-DERIVED: max([[NProbeMin]], ⌈ncells/[[CellsPerProbe]]⌉)
     * off the size of the already-broadcast codebook array — a fixed
     * scan fraction across scales, computed map-side from data the
     * expression already holds (no extra aggregate, no collect). */
-  private def withNearestCells(df: DataFrame, cents: DataFrame,
-                               emb: Column, nrm: Column,
-                               cellsPerProbe: Long = CellsPerProbe)
-      : DataFrame = {
+  private def probeCells(c: DataFrame, cents: DataFrame,
+                         cellsPerProbe: Long = CellsPerProbe,
+                         probeMax: Long = 10): DataFrame = {
     val nprobe = greatest(lit(NProbeMin),
       ceil(size(col("cb")).cast("double") / lit(cellsPerProbe.toDouble))
         .cast("long")).cast("int")
-    df.crossJoin(broadcast(centsAsArray(cents)))
+    val scored = scoredCents(col("p_emb"), col("p_nrm"))
+    probes(c, probeMax).crossJoin(broadcast(centsAsArray(cents)))
       .withColumn("cell", explode(transform(
-        slice(array_sort(transform(scoredCents(emb, nrm), sc => struct(
+        slice(array_sort(transform(scored, sc => struct(
           coalesce(-sc.getField("ccos"), lit(Double.PositiveInfinity))
             .as("negcos"),
           sc.getField("cent_id").as("cent_id")))), lit(1), nprobe),
@@ -170,34 +213,15 @@ object Vectors {
   /** Brute-force cosine top-5 per probe (probe set: vec_id < 10). */
   private val cosineTopk: Q = (s, d) => {
     val c = corpus(s, d)
-    val probes = c.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-        col("nrm").as("p_nrm"))
-    val scored = c.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos",
-        dot(col("emb"), col("p_emb")) / nullif(col("nrm") * col("p_nrm"), lit(0.0)))
-    rankPerProbe(scored, lit(5), col("cos").desc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        Det.r4(col("cos")).as("cosine"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    byRank(mostSimilar(exactCos(c.crossJoin(broadcast(probes(c)))), 5))
   }
 
   /** LSH-bucketed ANN top-3: candidates share the sign bucket —
     * equi-join instead of cross product. */
   private val annLsh: Q = (s, d) => {
     val c = corpus(s, d).withColumn("bucket", signBucket(col("emb")))
-    val probes = c.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-        col("nrm").as("p_nrm"), col("bucket"))
-    val scored = c.join(broadcast(probes), "bucket")
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos",
-        dot(col("emb"), col("p_emb")) / nullif(col("nrm") * col("p_nrm"), lit(0.0)))
-    rankPerProbe(scored, lit(3), col("cos").desc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        Det.r4(col("cos")).as("cosine"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    val ps = probes(c, cols = probeVec :+ col("bucket"))
+    byRank(mostSimilar(exactCos(c.join(broadcast(ps), "bucket")), 3))
   }
 
   /** Embedding-dedup blocking depth: each base blocks on
@@ -250,7 +274,7 @@ object Vectors {
       .join(c.select(col("vec_id").as("b_id"), col("emb").as("b_emb"),
         col("nrm").as("b_nrm")), "b_id")
       .withColumn("cos",
-        dot(col("a_emb"), col("b_emb")) / nullif(col("a_nrm") * col("b_nrm"), lit(0.0)))
+        cosOf(col("a_emb"), col("b_emb"), col("a_nrm"), col("b_nrm")))
       .filter(col("cos") >= 0.2)
       .select(col("a_id"), col("b_id"), Det.r4(col("cos")).as("cosine"))
       .orderBy(col("a_id").asc, col("b_id").asc)
@@ -266,21 +290,13 @@ object Vectors {
     val perBase = (0 to 1).map { base =>
       val off = base * 8
       val c = c0.withColumn("bucket", signBucketAt(col("emb"), off))
-      val probes = c.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-          col("nrm").as("p_nrm"), col("bucket"))
-      c.join(broadcast(probes), "bucket")
+      val ps = probes(c, cols = probeVec :+ col("bucket"))
+      c.join(broadcast(ps), "bucket")
         .filter(col("vec_id") =!= col("probe_id"))
-        .select(col("probe_id"), col("vec_id"),
-          (dot(col("emb"), col("p_emb")) / nullif(col("nrm") * col("p_nrm"), lit(0.0)))
-            .as("cos"))
+        .select(col("probe_id"), col("vec_id"), probeCos.as("cos"))
     }
-    val cands = perBase.reduce(_ unionAll _)
-      .dropDuplicates("probe_id", "vec_id")
-    rankPerProbe(cands, lit(3), col("cos").desc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        Det.r4(col("cos")).as("cosine"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    byRank(mostSimilar(perBase.reduce(_ unionAll _)
+      .dropDuplicates("probe_id", "vec_id"), 3))
   }
 
   /** Hamming-ball multi-probe ANN (Lv et al., multi-probe LSH): each
@@ -309,18 +325,8 @@ object Vectors {
           .otherwise(lit("1")),
         substring(col("bucket"), i + 1, 8 - i))
     }
-    val probes = c.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-        col("nrm").as("p_nrm"),
-        explode(array(flipped: _*)).as("bucket"))
-    val scored = c.join(broadcast(probes), "bucket")
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos",
-        dot(col("emb"), col("p_emb")) / nullif(col("nrm") * col("p_nrm"), lit(0.0)))
-    rankPerProbe(scored, lit(3), col("cos").desc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        Det.r4(col("cos")).as("cosine"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    val ps = probes(c, cols = probeVec :+ explode(array(flipped: _*)).as("bucket"))
+    byRank(mostSimilar(exactCos(c.join(broadcast(ps), "bucket")), 3))
   }
 
   // ── Multi-table rotated-base LSH (the header's promised rescue) ────
@@ -399,23 +405,16 @@ object Vectors {
       .select(col("vec_id"),
         explode(lshTableKeys(col("emb"))).as("tb"))
       .select(col("vec_id"), col("tb.t").as("t"), col("tb.bucket").as("bucket"))
-    val probes = keyed.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("t"), col("bucket"))
-    val cands = keyed.join(broadcast(probes), Seq("t", "bucket"))
+    val cands = keyed
+      .join(broadcast(probes(keyed, cols = Seq(col("t"), col("bucket")))),
+        Seq("t", "bucket"))
       .filter(col("vec_id") =!= col("probe_id"))
       .select(col("probe_id"), col("vec_id"))
       .dropDuplicates("probe_id", "vec_id")
-    val scored = cands
+    byRank(mostSimilar(cands
       .join(c.select(col("vec_id"), col("emb"), col("nrm")), "vec_id")
-      .join(broadcast(c.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-          col("nrm").as("p_nrm"))), "probe_id")
-      .withColumn("cos",
-        dot(col("emb"), col("p_emb")) / nullif(col("nrm") * col("p_nrm"), lit(0.0)))
-    rankPerProbe(scored, lit(3), col("cos").desc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        Det.r4(col("cos")).as("cosine"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+      .join(broadcast(probes(c)), "probe_id")
+      .withColumn("cos", probeCos), 3))
   }
 
   /** Deterministic 25% hash-sample membership for codebook TRAINING
@@ -571,20 +570,8 @@ object Vectors {
   private[graft] def ivfTopk(c: DataFrame, cents: DataFrame): DataFrame = {
     val assigned = withNearestCentroid(c, cents, col("emb"), col("nrm"))
       .select(col("vec_id"), col("emb"), col("nrm"), col("cent_id").as("cell"))
-    val probeCells = withNearestCells(
-      c.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-          col("nrm").as("p_nrm")),
-      cents, col("p_emb"), col("p_nrm"))
-      .select(col("probe_id"), col("p_emb"), col("p_nrm"), col("cell"))
-    val scored = assigned.join(broadcast(probeCells), "cell")
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos",
-        dot(col("emb"), col("p_emb")) / nullif(col("nrm") * col("p_nrm"), lit(0.0)))
-    rankPerProbe(scored, lit(3), col("cos").desc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        Det.r4(col("cos")).as("cosine"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    byRank(mostSimilar(
+      exactCos(assigned.join(broadcast(probeCells(c, cents)), "cell")), 3))
   }
 
   /** IVF (inverted-file) ANN top-3 with corpus-derived geometry
@@ -705,7 +692,7 @@ object Vectors {
     val pruned = a.join(b, Seq("cluster_id", "blk"))
       .filter(col("b_r") < col("a_r") && col("a_r") - col("b_r") <= lit(SemW))
       .withColumn("cos",
-        dot(col("a_emb"), col("b_emb")) / nullif(col("a_nrm") * col("b_nrm"), lit(0.0)))
+        cosOf(col("a_emb"), col("b_emb"), col("a_nrm"), col("b_nrm")))
       .filter(col("cos") >= lit(SemTau))
       .select(col("a_id")).distinct()
     rk.join(pruned, col("vec_id") === col("a_id"), "left")
@@ -725,15 +712,10 @@ object Vectors {
     import graft.functions.cosineSim
     val c = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
-    val probes = c.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"))
-    val scored = c.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("cos", cosineSim(col("emb"), col("p_emb")))
-    rankPerProbe(scored, lit(5), col("cos").desc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        Det.r4(col("cos")).as("cosine"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    byRank(mostSimilar(
+      c.crossJoin(broadcast(probes(c, cols = Seq(col("emb").as("p_emb")))))
+        .filter(col("vec_id") =!= col("probe_id"))
+        .withColumn("cos", cosineSim(col("emb"), col("p_emb"))), 5))
   }
 
   // --- Product quantization (PQ) ------------------------------------
@@ -772,11 +754,14 @@ object Vectors {
   private def d2(a: Column, b: Column): Column =
     dot(a, a) - lit(2.0) * dot(a, b) + dot(b, b)
 
+  /** Vector `v` exploded into its [[PqM]] subspace slices as (j, sv). */
+  private def subspaces(v: Column): Column =
+    posexplode(array((0 until PqM).map(j =>
+      slice(v, j * PqDim + 1, PqDim)): _*)).as(Seq("j", "sv"))
+
   /** (vec_id, j, sv): the corpus exploded into per-subspace slices. */
   private[graft] def subvecs(c: DataFrame): DataFrame =
-    c.select(col("vec_id"),
-      posexplode(array((0 until PqM).map(j =>
-        slice(col("emb"), j * PqDim + 1, PqDim)): _*)).as(Seq("j", "sv")))
+    c.select(col("vec_id"), subspaces(col("emb")))
 
   /** The M per-subspace codebooks folded into M broadcast-able rows:
     * j → cent_id-sorted (cent_id, cv) struct array. The per-(vec, j)
@@ -862,13 +847,8 @@ object Vectors {
   private val annPq: Q = (s, d) => {
     val c = corpus(s, d)
     val cents = pqCodebook(c, PqRounds)
-    val codes = pqCodes(c, cents)
-      .select(col("vec_id"), col("j"), col("code"))
-    rankPerProbe(adcScores(c, cents, codes), lit(5),
-        col("adist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("adist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    byRank(nearest(flatAdcScores(c, cents,
+      pqCodes(c, cents).select(col("vec_id"), col("j"), col("code"))), 5, "adist"))
   }
 
   /** ADC search over a SAMPLE-TRAINED PQ codebook: the M per-subspace
@@ -883,36 +863,37 @@ object Vectors {
     val c = corpus(s, d)
     val cents = pqCodebook(
       c.filter(trainSample(col("vec_id")) || col("vec_id") < PqK), PqRounds)
-    val codes = pqCodes(c, cents)
-      .select(col("vec_id"), col("j"), col("code"))
-    rankPerProbe(adcScores(c, cents, codes), lit(5),
-        col("adist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("adist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    byRank(nearest(flatAdcScores(c, cents,
+      pqCodes(c, cents).select(col("vec_id"), col("j"), col("code"))), 5, "adist"))
   }
 
-  /** The ADC scoring core shared by [[annPq]] / [[annPqStored]] /
-    * [[annPqRerank]]: per-probe (j, cent) → quantized partial-d² LUT
-    * (M·K rows, broadcast), code-keyed join, partial-aggregated sum.
-    * Returns the UNRANKED (probe_id, vec_id, adist) stream — callers
-    * rank with [[rankPerProbe]] at their own depth, so the ranking is
-    * always two-level (local top-k per balanced partition, then a
-    * search-bounded global merge), never a per-probe corpus-sized
-    * window partition. */
-  private def adcScores(c: DataFrame, cents: DataFrame,
-                        codes: DataFrame): DataFrame = {
-    val lut = subvecs(c.filter(col("vec_id") < 10))
-      .withColumnRenamed("vec_id", "probe_id")
-      .join(broadcast(cents), Seq("j"))
-      .select(col("probe_id"), col("j").as("lj"),
-        col("cent_id").as("lc"), Det.qi4(d2(col("sv"), col("cv"))).as("pd2"))
-    codes.join(broadcast(lut),
-        col("j") === col("lj") && col("code") === col("lc"))
+  /** The one ADC scoring core: per-probe (j, cent) → quantized
+    * partial-d² LUT built from the probe `slices` (probe_id, [cell,]
+    * j, sv) against `book` (broadcast), a code-keyed join against
+    * `codes`, and a partial-aggregated (probe, vec) sum. With a
+    * `cellKey` the LUT is per (probe, probed cell) and the join also
+    * matches `cellKey` (the inverted-list cell, or the split parent)
+    * to the probed cell. Returns the UNRANKED (probe_id, vec_id,
+    * adist) stream — callers rank two-level ([[nearest]] or
+    * [[shortlist]]), never a per-probe corpus-sized window. */
+  private def adcScores(slices: DataFrame, book: DataFrame, codes: DataFrame,
+                        cellKey: Option[Column] = None): DataFrame = {
+    val lut = slices.join(broadcast(book), Seq("j"))
+      .select(Seq(col("probe_id")) ++ cellKey.map(_ => col("cell").as("lcell")) ++
+        Seq(col("j").as("lj"), col("cent_id").as("lc"),
+          Det.qi4(d2(col("sv"), col("cv"))).as("pd2")): _*)
+    val on = cellKey.map(_ === col("lcell")).toSeq ++
+      Seq(col("j") === col("lj"), col("code") === col("lc"))
+    codes.join(broadcast(lut), on.reduce(_ && _))
       .filter(col("vec_id") =!= col("probe_id"))
       .groupBy(col("probe_id"), col("vec_id"))
       .agg(sum(col("pd2")).as("adist"))
   }
+
+  /** Flat (cell-free) ADC of the [[probes]] over a PQ code table. */
+  private def flatAdcScores(c: DataFrame, cents: DataFrame,
+                            codes: DataFrame): DataFrame =
+    adcScores(probes(c, cols = Seq(subspaces(col("emb")))), cents, codes)
 
   /** The STORED PQ index behind [[annPqStored]]: codebook + code
     * tables built ONCE per (fixture path, content stamp) — the Lloyd
@@ -998,11 +979,7 @@ object Vectors {
     * full-training recompute witness. */
   private val annPqStored: Q = (s, d) => {
     val (cents, codes) = storedPqIndex(s, d)
-    rankPerProbe(adcScores(corpus(s, d), cents, codes), lit(5),
-        col("adist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("adist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    byRank(nearest(flatAdcScores(corpus(s, d), cents, codes), 5, "adist"))
   }
 
   /** ADC search over the day-chained index: identical plan to
@@ -1013,11 +990,7 @@ object Vectors {
     * hash-compare proves chained-append ≡ full rebuild. */
   private val annPqDay2: Q = (s, d) => {
     val (book, codes) = storedPqDayIndex(s, d)
-    rankPerProbe(adcScores(corpus(s, d), book, codes), lit(5),
-        col("adist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("adist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    byRank(nearest(flatAdcScores(corpus(s, d), book, codes), 5, "adist"))
   }
 
   /** ADC shortlist depth for the re-ranked search: candidates kept
@@ -1060,28 +1033,32 @@ object Vectors {
     s"(SELECT GREATEST($RerankCMin, CAST(CEIL($RerankCFactor * " +
       "SQRT(COUNT(*))) AS BIGINT)) FROM c)"
 
-  /** The exact re-rank stage shared by [[annPqRerank]] and
-    * [[annIvfPqRerank]]: fetch the true vectors of the shortlist
-    * (probes × ≤C rows, broadcast back onto the corpus scan as a
-    * semijoin — an ID-keyed point-lookup read at 100 TB), score by
-    * exact cosine, keep the per-probe top-k. The corpus is never
-    * shuffled and never self-joined. */
+  /** The rerank shortlist: the per-probe top-C(n) ([[rerankClim]] at
+    * `cFactor`) of an unranked score stream by `dist` ascending, as
+    * (probe_id, vec_id) — probes × ≤C rows, search-bounded. */
+  private def shortlist(c: DataFrame, scores: DataFrame, dist: String,
+                        cFactor: Double = RerankCFactor): DataFrame =
+    rankPerProbe(scores.crossJoin(broadcast(rerankClim(c, cFactor))),
+        col("c_lim"), col(dist).asc, col("vec_id").asc)
+      .select(col("probe_id"), col("vec_id"))
+
+  /** The exact re-rank stage every rerank search ends in: fetch the
+    * true vectors of the [[shortlist]] (probes × ≤C rows, broadcast
+    * back onto the corpus scan as a semijoin — an ID-keyed
+    * point-lookup read at 100 TB), score by exact cosine, keep the
+    * per-probe top-k. The corpus is never shuffled and never
+    * self-joined. Unsorted. */
   private def exactRerank(c: DataFrame, shortlist: DataFrame,
                           k: Int): DataFrame = {
-    val probes = c.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-        col("nrm").as("p_nrm"))
     val w = Window.partitionBy(col("probe_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
     c.join(broadcast(shortlist), Seq("vec_id"))
-      .join(broadcast(probes), Seq("probe_id"))
-      .withColumn("cos",
-        dot(col("emb"), col("p_emb")) / nullif(col("nrm") * col("p_nrm"), lit(0.0)))
+      .join(broadcast(probes(c)), Seq("probe_id"))
+      .withColumn("cos", probeCos)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
         Det.r4(col("cos")).as("cosine"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
   }
 
   /** PQ search with exact re-ranking — the standard production recall
@@ -1106,11 +1083,7 @@ object Vectors {
     val cents = pqCodebook(c, PqRounds)
     val codes = pqCodes(c, cents)
       .select(col("vec_id"), col("j"), col("code"))
-    val shortlist = rankPerProbe(
-        adcScores(c, cents, codes).crossJoin(broadcast(rerankClim(c))),
-        col("c_lim"), col("adist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("vec_id"))
-    exactRerank(c, shortlist, 5)
+    byRank(exactRerank(c, shortlist(c, flatAdcScores(c, cents, codes), "adist"), 5))
   }
 
   /** IVF-PQ: the two ANN economies composed — the coarse quantizer
@@ -1143,62 +1116,49 @@ object Vectors {
     * laid out by cell, so probing N cells is a partition-pruned
     * read. */
   private[graft] def ivfpqCodes(c: DataFrame, coarse: DataFrame,
-                                book: DataFrame): DataFrame = {
-    val withCell = withNearestCentroid(c, coarse, col("emb"), col("nrm"))
-      .select(col("vec_id"), col("emb"), col("cent_id").as("cell"))
-    withPqCode(
-        withCell.select(col("vec_id"), col("cell"),
-          posexplode(array((0 until PqM).map(j =>
-            slice(col("emb"), j * PqDim + 1, PqDim)): _*)).as(Seq("j", "sv"))),
-        book)
-      .select(col("vec_id"), col("cell"), col("j"), col("code"))
-  }
+                                book: DataFrame): DataFrame =
+    cellCodes(withNearestCentroid(c, coarse, col("emb"), col("nrm"))
+      .select(col("vec_id"), col("emb"), col("cent_id").as("cell")),
+      col("emb"), book)
 
-  /** The IVF-PQ scoring core: probes pick their derived-nprobe cells map-side,
-    * pre-join their per-cell ADC LUT (nprobe·M·K rows, broadcast),
-    * then one (cell, j, code)-keyed join against the inverted-list
-    * table and a partial-aggregated (probe, vec) sum of quantized
-    * partials. Returns the UNRANKED (probe_id, vec_id, adist) stream
-    * — callers rank two-level via [[rankPerProbe]]. The corpus is
-    * never shuffled with its vectors and never self-joined. */
-  private def ivfpqScores(c: DataFrame, coarse: DataFrame, book: DataFrame,
-                          ccodes: DataFrame,
-                          cellsPerProbe: Long = CellsPerProbe,
+  /** (vec_id, cell, j, code): the PQ codes of vector `v` of a
+    * cell-tagged frame — the inverted-list table, map-side. */
+  private def cellCodes(df: DataFrame, v: Column, book: DataFrame): DataFrame =
+    withPqCode(df.select(col("vec_id"), col("cell"), subspaces(v)), book)
+      .select(col("vec_id"), col("cell"), col("j"), col("code"))
+
+  /** The one IVF-ADC scorer: each (probe, probed cell) row of
+    * `probeCells` contributes its probe vector `pv` — raw `p_emb`, or
+    * the residual `pres` against that cell's centroid — to a per-cell
+    * ADC LUT (nprobe·M·K rows, broadcast), matched on
+    * (`codeKey`, j, code) against the inverted lists: `codeKey` is
+    * `cell`, or the split store's parent `jcell`. Unranked
+    * (probe_id, vec_id, adist). The corpus is never shuffled with its
+    * vectors and never self-joined. */
+  private def ivfAdcScores(probeCells: DataFrame, pv: Column, book: DataFrame,
+                           codes: DataFrame, codeKey: Column): DataFrame =
+    adcScores(probeCells.select(col("probe_id"), col("cell"), subspaces(pv)),
+      book, codes, Some(codeKey))
+
+  /** Raw-vector IVF-PQ scores of the probes over the (coarse, book,
+    * ccodes) index, cell-pruned against `pruneDir` when given. */
+  private def ivfpqScores(c: DataFrame, index: (DataFrame, DataFrame, DataFrame),
                           pruneDir: Option[String] = None,
+                          cellsPerProbe: Long = CellsPerProbe,
                           probeMax: Long = 10): DataFrame = {
-    val probeCells = withNearestCells(
-      c.filter(col("vec_id") < probeMax)
-        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-          col("nrm").as("p_nrm")),
-      coarse, col("p_emb"), col("p_nrm"), cellsPerProbe)
+    val (coarse, book, ccodes) = index
+    val pc = probeCells(c, coarse, cellsPerProbe, probeMax)
       .select(col("probe_id"), col("p_emb"), col("cell"))
-    val probeLut = probeCells
-      .select(col("probe_id"), col("cell"),
-        posexplode(array((0 until PqM).map(j =>
-          slice(col("p_emb"), j * PqDim + 1, PqDim)): _*)).as(Seq("j", "sv")))
-      .join(broadcast(book), Seq("j"))
-      .select(col("probe_id"), col("cell").as("lcell"), col("j").as("lj"),
-        col("cent_id").as("lc"), Det.qi4(d2(col("sv"), col("cv"))).as("pd2"))
-    pruneDir.map(prunedToCells(ccodes, probeCells, _,
-        s"$cellsPerProbe#$probeMax"))
-      .getOrElse(ccodes)
-      .join(broadcast(probeLut),
-        col("cell") === col("lcell") && col("j") === col("lj") &&
-          col("code") === col("lc"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(sum(col("pd2")).as("adist"))
+    ivfAdcScores(pc, col("p_emb"), book,
+      prunedToCells(ccodes, pc, pruneDir, s"$cellsPerProbe#$probeMax"), col("cell"))
   }
 
   private val annIvfPq: Q = (s, d) => {
     val c = corpus(s, d)
     val coarse = kmeansCentroids(c, rounds = 3)
     val book = pqCodebook(c, PqRounds)
-    rankPerProbe(ivfpqScores(c, coarse, book, ivfpqCodes(c, coarse, book)),
-        lit(3), col("adist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("adist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    byRank(nearest(ivfpqScores(c, (coarse, book, ivfpqCodes(c, coarse, book))),
+      3, "adist"))
   }
 
   /** The STORED IVF-PQ index — the missing store the round-12 verdict
@@ -1240,17 +1200,8 @@ object Vectors {
     * ([[sqlAnnIvfPqStored]]) restates that lineage, so the driver
     * hash-compare certifies the offline build end-to-end;
     * [[annIvfPq]] remains the full-training recompute witness. */
-  private val annIvfPqStored: Q = (s, d) => {
-    val c = corpus(s, d)
-    val (coarse, book, ccodes) = storedIvfPqIndex(s, d)
-    rankPerProbe(
-        ivfpqScores(c, coarse, book, ccodes,
-          pruneDir = Some(Store.dir(Store.Pq, d, "ivfcodes"))),
-        lit(3), col("adist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("adist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
-  }
+  private val annIvfPqStored: Q = (s, d) =>
+    byRank(ivfpqStoredSearch(s, d, 10, CellsPerProbe, prune = true))
 
   /** Parameterized search over the STORED IVF-PQ index for the
     * AnnOneProbe audit tool: `probeMax` bounds the probe set
@@ -1258,21 +1209,19 @@ object Vectors {
     * geometry), `cellsPerProbe` the derived nprobe, `prune` toggles
     * the plan-time partition resolve so the tool can measure the
     * partitioned layout's filesRead/wall win against the same store
-    * scanned flat. Not a registry key — the registry points
-    * ([[annIvfPqStored]], [[annIvfPqRerank]]) stay the 10-probe
-    * oracle-checked geometry. */
+    * scanned flat. [[annIvfPqStored]] is this search at the 10-probe,
+    * pruned, oracle-checked registry geometry plus [[byRank]]; the
+    * search itself stays unsorted because AnnOneProbe times it. */
   private[graft] def ivfpqStoredSearch(s: SparkSession, d: String,
-      probeMax: Long, cellsPerProbe: Long, prune: Boolean): DataFrame = {
-    val c = corpus(s, d)
-    val (coarse, book, ccodes) = storedIvfPqIndex(s, d)
-    rankPerProbe(
-        ivfpqScores(c, coarse, book, ccodes, cellsPerProbe,
-          pruneDir = if (prune) Some(Store.dir(Store.Pq, d, "ivfcodes")) else None,
-          probeMax = probeMax),
-        lit(3), col("adist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("adist"))
-  }
+      probeMax: Long, cellsPerProbe: Long, prune: Boolean): DataFrame =
+    nearest(ivfpqStoredScores(s, d, corpus(s, d), probeMax, cellsPerProbe, prune),
+      3, "adist")
+
+  private def ivfpqStoredScores(s: SparkSession, d: String, c: DataFrame,
+      probeMax: Long, cellsPerProbe: Long, prune: Boolean): DataFrame =
+    ivfpqScores(c, storedIvfPqIndex(s, d),
+      Some(Store.dir(Store.Pq, d, "ivfcodes")).filter(_ => prune),
+      cellsPerProbe, probeMax)
 
   /** IVF-PQ with per-cell RESIDUAL coding — the production refinement
     * the raw-vector variant's scaladoc names (and FAISS's default
@@ -1306,46 +1255,20 @@ object Vectors {
       .select(col("vec_id"), col("cell"), col("res"))
       .localCheckpoint()
 
-  /** Residual inverted-list table: (vec_id, cell, j, code), map-side. */
-  private def residualCodes(rf: DataFrame, book: DataFrame): DataFrame =
-    withPqCode(
-        rf.select(col("vec_id"), col("cell"),
-          posexplode(array((0 until PqM).map(j =>
-            slice(col("res"), j * PqDim + 1, PqDim)): _*)).as(Seq("j", "sv"))),
-        book)
-      .select(col("vec_id"), col("cell"), col("j"), col("code"))
-
-  /** The residual-ADC scoring core: probe residuals per probed cell,
-    * per-(probe, cell) LUT against the residual book, cell-pruned
-    * code join, partial-aggregated sum. Unranked — callers rank. */
-  private def residualScores(c: DataFrame, coarse: DataFrame,
-                             book: DataFrame, ccodes: DataFrame,
-                             cellsPerProbe: Long = CellsPerProbe,
-                             pruneDir: Option[String] = None): DataFrame = {
-    val probeRes = withNearestCells(
-      c.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-          col("nrm").as("p_nrm")),
-      coarse, col("p_emb"), col("p_nrm"), cellsPerProbe)
+  /** Residual-IVF-PQ scores: each probe's residual against every
+    * probed cell's centroid feeds [[ivfAdcScores]] over the residual
+    * book, cell-pruned against `pruneDir` when given. */
+  private def residualScores(c: DataFrame, index: (DataFrame, DataFrame, DataFrame),
+                             pruneDir: Option[String] = None,
+                             cellsPerProbe: Long = CellsPerProbe): DataFrame = {
+    val (coarse, book, ccodes) = index
+    val probeRes = probeCells(c, coarse, cellsPerProbe)
       .select(col("probe_id"), col("p_emb"), col("cell"))
       .join(broadcast(coarse.select(col("cent_id").as("cell"), col("c_emb"))),
         "cell")
       .withColumn("pres", zip_with(col("p_emb"), col("c_emb"), (a, b) => a - b))
-    val probeLut = probeRes
-      .select(col("probe_id"), col("cell"),
-        posexplode(array((0 until PqM).map(j =>
-          slice(col("pres"), j * PqDim + 1, PqDim)): _*)).as(Seq("j", "sv")))
-      .join(broadcast(book), Seq("j"))
-      .select(col("probe_id"), col("cell").as("lcell"), col("j").as("lj"),
-        col("cent_id").as("lc"), Det.qi4(d2(col("sv"), col("cv"))).as("pd2"))
-    pruneDir.map(prunedToCells(ccodes, probeRes, _, s"$cellsPerProbe"))
-      .getOrElse(ccodes)
-      .join(broadcast(probeLut),
-        col("cell") === col("lcell") && col("j") === col("lj") &&
-          col("code") === col("lc"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(sum(col("pd2")).as("adist"))
+    ivfAdcScores(probeRes, col("pres"), book,
+      prunedToCells(ccodes, probeRes, pruneDir, s"$cellsPerProbe"), col("cell"))
   }
 
   /** PLAN-TIME coarse-index read: restrict a cell-partitioned code
@@ -1365,8 +1288,8 @@ object Vectors {
     * drops every unprobed cell's rows.
     *
     * Two round-16 economies, both planner-shaped:
-    *  - the resolved cell set is MEMOIZED per (store dir,
-    *    cellsPerProbe): the store dir embeds the content stamp and
+    *  - the resolved cell set is MEMOIZED per (store dir, parent
+    *    mode, probe geometry): the store dir embeds the content stamp and
     *    family version, so the probe→cell assignment is a pure
     *    function of the key and re-running the probe sub-plan on
     *    every execution (round-15 ADVICE) bought nothing. This is
@@ -1400,20 +1323,29 @@ object Vectors {
     rows.map(_.getLong(0)).distinct.sorted.toSeq
   }
 
-  private def prunedToCells(ccodes: DataFrame, probeCells: DataFrame,
-                            storeDir: String, memoTag: String)
-      : DataFrame = {
-    if (resolvedCellsMemo.size > ResolvedCellsMemoCap)
-      resolvedCellsMemo.clear()
-    val cells = resolvedCellsMemo.computeIfAbsent(
-      s"$storeDir#$memoTag", _ => resolveProbeCells(probeCells))
-    // Set membership: the coverage check is O(|universe|), not
-    // O(|universe| × |cells|) (round-16 ADVICE — cells may hold up to
-    // MaxResolvedCells entries, making the linear-scan form quadratic)
-    val cellSet = cells.toSet
-    if (Store.storedPartValues(storeDir).forall(cellSet.contains)) ccodes
-    else ccodes.filter(col("cell").isin(cells: _*))
-  }
+  /** `parents = true` is the split store's parent expansion: the
+    * probes resolved PARENT cells off the coarse book, and the filter
+    * keeps every child partition of a probed parent (child ids are
+    * parent-recoverable, cell DIV [[SplitBase]]). `storeDir = None`
+    * (an unstored or flat-read index) returns `codes` as-is. */
+  private def prunedToCells(codes: DataFrame, probeCells: DataFrame,
+                            storeDir: Option[String], memoTag: String,
+                            parents: Boolean = false): DataFrame =
+    storeDir.fold(codes) { dir =>
+      if (resolvedCellsMemo.size > ResolvedCellsMemoCap)
+        resolvedCellsMemo.clear()
+      val cells = resolvedCellsMemo.computeIfAbsent(
+        s"$dir#$parents#$memoTag", _ => resolveProbeCells(probeCells))
+      // Set membership: the coverage check is O(|universe|), not
+      // O(|universe| × |cells|) (round-16 ADVICE — cells may hold up to
+      // MaxResolvedCells entries, making the linear-scan form quadratic)
+      val probed = cells.toSet
+      val all = Store.storedPartValues(dir)
+      val covered = (v: Long) => probed(if (parents) v / SplitBase else v)
+      if (all.forall(covered)) codes
+      else codes.filter(col("cell").isin(
+        (if (parents) all.filter(covered) else cells): _*))
+    }
 
   private val annIvfPqResidual: Q = (s, d) => {
     val c = corpus(s, d)
@@ -1421,14 +1353,10 @@ object Vectors {
     val rf = residualFrame(c, coarse)
     val book = pqCodebook(
       rf.select(col("vec_id"), col("res").as("emb")), PqRounds)
-    val ccodes = residualCodes(rf, book)
-    // no pruneCells: this recompute witness trains in-query, and the
+    // no pruneDir: this recompute witness trains in-query, and the
     // plan-time cell resolve would re-run that training once more
-    rankPerProbe(residualScores(c, coarse, book, ccodes),
-        lit(3), col("adist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("adist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    byRank(nearest(residualScores(c, (coarse, book, cellCodes(rf, col("res"), book))),
+      3, "adist"))
   }
 
   /** The STORED residual index — the production form of
@@ -1466,7 +1394,7 @@ object Vectors {
         // same cell-partitioned layout as the raw ivfcodes store —
         // the rerank path's code scan prunes to the probed cells
         partitionBy = Seq("cell")) {
-      residualCodes(rf, book)
+      cellCodes(rf, col("res"), book)
     }
     (coarse, book, ccodes)
   }
@@ -1476,17 +1404,14 @@ object Vectors {
     * restates that lineage — the driver hash-compare certifies the
     * sampled offline build end-to-end; [[annIvfPqResidual]] remains
     * the full-training recompute witness. */
-  private val annIvfPqResidualStored: Q = (s, d) => {
-    val c = corpus(s, d)
-    val (coarse, book, ccodes) = storedIvfPqResidualIndex(s, d)
-    rankPerProbe(
-        residualScores(c, coarse, book, ccodes,
-          pruneDir = Some(Store.dir(Store.Pq, d, "rescodes"))),
-        lit(3), col("adist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("adist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
-  }
+  private val annIvfPqResidualStored: Q = (s, d) =>
+    byRank(nearest(residualStoredScores(s, d, corpus(s, d), CellsPerProbe),
+      3, "adist"))
+
+  private def residualStoredScores(s: SparkSession, d: String, c: DataFrame,
+                                   cellsPerProbe: Long): DataFrame =
+    residualScores(c, storedIvfPqResidualIndex(s, d),
+      Some(Store.dir(Store.Pq, d, "rescodes")), cellsPerProbe)
 
   /** RESIDUAL IVF-PQ with exact re-ranking — the FAISS-default
     * production stack composed end-to-end (`IndexIVFPQ` with its
@@ -1502,9 +1427,8 @@ object Vectors {
     * fetch is an ID-keyed broadcast semijoin. Before this key the
     * best-recall search re-ranked the NON-residual index; the better
     * index existed and nothing searched it at full quality. */
-  private val annIvfPqResidualRerank: Q =
-    rerankFrontier("q_sim_ann_ivfpq_residual_rerank",
-      RerankCFactor, CellsPerProbe)
+  private[graft] val ResidualRerank =
+    new RerankFamily("adist", 3, residualStoredScores)
 
   /** IVF-PQ with exact re-ranking — the full production ANN stack
     * (FAISS `IndexIVFPQ` + `IndexRefineFlat`): the coarse quantizer
@@ -1518,8 +1442,8 @@ object Vectors {
     * search pays no codebook training (the round-12 verdict's 5.2 s
     * was two in-query Lloyd trainings; the store's coherence is
     * certified by [[annIvfPqStored]]'s own sampled-lineage oracle). */
-  private val annIvfPqRerank: Q =
-    rerankFrontier("q_sim_ann_ivfpq_rerank", RerankCFactor, CellsPerProbe)
+  private[graft] val IvfPqRerank = new RerankFamily("adist", 3,
+    (s, d, c, cpp) => ivfpqStoredScores(s, d, c, 10, cpp, prune = true))
 
   /** Per-cell occupancy of the STORED IVF inverted lists — the
     * index-health audit behind every scan-fraction claim: the
@@ -1553,24 +1477,25 @@ object Vectors {
     * both broadcast. Empty probed cells scan zero rows but still
     * count as probed (LEFT join). */
   private val annScanFrac: Q = (s, d) => {
-    val c = corpus(s, d)
     val (coarse, _, ccodes) = storedIvfPqIndex(s, d)
+    scanFrac(corpus(s, d), coarse, ccodes)
+  }
+
+  /** Per-probe scan accounting of the probes over `probeBook` against
+    * the inverted lists `codes` (one row per vector at j = 0). */
+  private def scanFrac(c: DataFrame, probeBook: DataFrame,
+                       codes: DataFrame): DataFrame = {
     // localCheckpoint: occ feeds BOTH the probe join and the corpus
     // total; without it the two consumers' plans differ (the join
     // side carries a DPP filter) and ReuseExchange declines, so the
     // index store was scanned twice (PlanAudit round 16). ncells
     // rows — dim-sized at any scale.
-    val occ = ccodes.filter(col("j") === 0)
+    val occ = codes.filter(col("j") === 0)
       .groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
       .localCheckpoint()
     val total = occ.agg(sum(col("n_vecs")).as("n_total"))
-    val probeCells = withNearestCells(
-      c.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-          col("nrm").as("p_nrm")),
-      coarse, col("p_emb"), col("p_nrm"))
-      .select(col("probe_id"), col("cell"))
-    probeCells.join(broadcast(occ), Seq("cell"), "left")
+    probeCells(c, probeBook).select(col("probe_id"), col("cell"))
+      .join(broadcast(occ), Seq("cell"), "left")
       .groupBy(col("probe_id"))
       .agg(count(lit(1)).as("n_cells_probed"),
         sum(coalesce(col("n_vecs"), lit(0L))).as("rows_scanned"))
@@ -1766,24 +1691,6 @@ object Vectors {
     (coarse, book, scents, scodes)
   }
 
-  /** Plan-time prune of the SPLIT code table to the probed PARENTS'
-    * children: resolve the probe→parent assignment once (memoized, as
-    * [[prunedToCells]]), then expand parents to child partitions via
-    * the `_CELLS` sidecar universe — still a static literal partition
-    * filter, no listing, no extra job. */
-  private def prunedToParentCells(scodes: DataFrame, probeCells: DataFrame,
-                                  storeDir: String, memoTag: String)
-      : DataFrame = {
-    if (resolvedCellsMemo.size > ResolvedCellsMemoCap)
-      resolvedCellsMemo.clear()
-    val parents = resolvedCellsMemo.computeIfAbsent(
-      s"$storeDir#$memoTag", _ => resolveProbeCells(probeCells)).toSet
-    val all = Store.storedPartValues(storeDir)
-    val children = all.filter(v => parents.contains(v / SplitBase))
-    if (children.size == all.size) scodes
-    else scodes.filter(col("cell").isin(children: _*))
-  }
-
   /** Search over the SPLIT index, two geometries:
     *
     *  - `childProbe = false` (the declared key): probes resolve
@@ -1798,55 +1705,31 @@ object Vectors {
     *    child book directly. On a skewed corpus this restores
     *    per-probe scanned rows to ≈ nprobe · mean-cell-size — the
     *    scan-fraction guarantee the mega-cell broke — at the recall
-    *    cost the receipt records. */
+    *    cost the receipt records.
+    *
+    * Unsorted, like every tool-facing search (AnnOneProbe times it). */
   private[graft] def ivfpqSplitSearch(s: SparkSession, d: String,
       probeMax: Long = 10, cellsPerProbe: Long = CellsPerProbe,
       childProbe: Boolean = false, prune: Boolean = true): DataFrame = {
     val c = corpus(s, d)
     val (coarse, book, scents, scodes) = storedIvfPqSplitIndex(s, d)
-    val probeBook = if (childProbe) scents else coarse
-    val probeCells = withNearestCells(
-      c.filter(col("vec_id") < probeMax)
-        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-          col("nrm").as("p_nrm")),
-      probeBook, col("p_emb"), col("p_nrm"), cellsPerProbe)
+    val pc = probeCells(c, if (childProbe) scents else coarse,
+        cellsPerProbe, probeMax)
       .select(col("probe_id"), col("p_emb"), col("cell"))
-    val probeLut = probeCells
-      .select(col("probe_id"), col("cell"),
-        posexplode(array((0 until PqM).map(j =>
-          slice(col("p_emb"), j * PqDim + 1, PqDim)): _*)).as(Seq("j", "sv")))
-      .join(broadcast(book), Seq("j"))
-      .select(col("probe_id"), col("cell").as("lcell"), col("j").as("lj"),
-        col("cent_id").as("lc"), Det.qi4(d2(col("sv"), col("cv"))).as("pd2"))
-    val storeDir = Store.dir(Store.Pq, d, "splitcodes")
-    val tag = s"split#$childProbe#$cellsPerProbe#$probeMax"
-    val pruned =
-      if (!prune) scodes
-      else if (childProbe) prunedToCells(scodes, probeCells, storeDir, tag)
-      else prunedToParentCells(scodes, probeCells, storeDir, tag)
-    val keyed =
-      if (childProbe) pruned
-      else pruned.withColumn("jcell",
-        (col("cell").cast("long") / lit(SplitBase)).cast("long"))
-    val joinKey = if (childProbe) col("cell") else col("jcell")
-    keyed
-      .join(broadcast(probeLut),
-        joinKey === col("lcell") && col("j") === col("lj") &&
-          col("code") === col("lc"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .groupBy(col("probe_id"), col("vec_id"))
-      .agg(sum(col("pd2")).as("adist"))
-      .transform(sc => rankPerProbe(sc, lit(3),
-        col("adist").asc, col("vec_id").asc))
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("adist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    val pruned = prunedToCells(scodes, pc,
+      Some(Store.dir(Store.Pq, d, "splitcodes")).filter(_ => prune),
+      s"$cellsPerProbe#$probeMax", parents = !childProbe)
+    val (codes, codeKey) =
+      if (childProbe) (pruned, col("cell"))
+      else (pruned.withColumn("jcell",
+        (col("cell").cast("long") / lit(SplitBase)).cast("long")), col("jcell"))
+    nearest(ivfAdcScores(pc, col("p_emb"), book, codes, codeKey), 3, "adist")
   }
 
   /** Declared key: the split-generation search at the registry's
     * geometry (parent expansion — shares [[sqlAnnIvfPqStored]]; see
     * [[ivfpqSplitSearch]]). */
-  private val annIvfPqSplit: Q = (s, d) => ivfpqSplitSearch(s, d)
+  private val annIvfPqSplit: Q = (s, d) => byRank(ivfpqSplitSearch(s, d))
 
   /** [[annScanFrac]]'s accounting over the SPLIT store at the
     * REBALANCED child geometry — the measured half of the split
@@ -1857,25 +1740,8 @@ object Vectors {
     * declared split key is the oracle-shared parent-expansion
     * geometry. */
   private[graft] def splitScanFrac(s: SparkSession, d: String): DataFrame = {
-    val c = corpus(s, d)
     val (_, _, scents, scodes) = storedIvfPqSplitIndex(s, d)
-    val occ = scodes.filter(col("j") === 0)
-      .groupBy(col("cell")).agg(count(lit(1)).as("n_vecs"))
-      .localCheckpoint()
-    val total = occ.agg(sum(col("n_vecs")).as("n_total"))
-    val probeCells = withNearestCells(
-      c.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-          col("nrm").as("p_nrm")), scents, col("p_emb"), col("p_nrm"))
-      .select(col("probe_id"), col("cell"))
-    probeCells.join(broadcast(occ), Seq("cell"), "left")
-      .groupBy(col("probe_id"))
-      .agg(count(lit(1)).as("n_cells_probed"),
-        sum(coalesce(col("n_vecs"), lit(0L))).as("rows_scanned"))
-      .crossJoin(broadcast(total))
-      .select(col("probe_id"), col("n_cells_probed"), col("rows_scanned"),
-        Det.r4(col("rows_scanned") / col("n_total")).as("scan_frac"))
-      .orderBy(col("probe_id").asc)
+    scanFrac(corpus(s, d), scents, scodes)
   }
 
   // --- Scalar quantization (SQ8) --------------------------------------
@@ -1939,28 +1805,21 @@ object Vectors {
     * sample — the quantizer is insensitive to tail clipping),
     * quantization is map-side, and the search join never shuffles the
     * corpus. */
-  private val annSq8: Q = (s, d) => {
-    val c = corpus(s, d)
-    val qc = sq8Corpus(c)
-    val probes = qc.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("probe_id"), col("q").as("pq"))
-    val scored = qc.crossJoin(broadcast(probes))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("qdist",
-        aggregate(zip_with(col("q"), col("pq"), (a, b) => (a - b) * (a - b)),
-          lit(0L), _ + _))
-    rankPerProbe(scored, lit(5), col("qdist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("qdist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
-  }
+  private val annSq8: Q = (s, d) =>
+    byRank(nearest(sq8Scores(sq8Corpus(corpus(s, d))), 5, "qdist"))
 
-  /** SQ8 with exact re-ranking — the [[annPqRerank]] recipe on the
-    * scalar-quantized scan: integer-distance shortlist of the
-    * corpus-derived top-[[rerankClim]], then exact cosine over the
-    * probes×C fetch only. */
-  private val annSq8Rerank: Q =
-    rerankFrontier("q_sim_ann_sq8_rerank", RerankCFactor, CellsPerProbe)
+  /** The exact integer SQ8 distance Σ(q − pq)² of a code row to a
+    * quantized probe. */
+  private def sq8Dist: Column =
+    aggregate(zip_with(col("q"), col("pq"), (a, b) => (a - b) * (a - b)),
+      lit(0L), _ + _)
+
+  /** Brute-force SQ8 scores: every quantized corpus row of `qc`
+    * against every quantized probe, unranked (probe_id, vec_id, qdist). */
+  private def sq8Scores(qc: DataFrame): DataFrame =
+    qc.crossJoin(broadcast(probes(qc, cols = Seq(col("q").as("pq")))))
+      .filter(col("vec_id") =!= col("probe_id"))
+      .withColumn("qdist", sq8Dist)
 
   // --- IVF-SQ8 (FAISS IndexIVFScalarQuantizer) ------------------------
   //
@@ -2011,54 +1870,27 @@ object Vectors {
     * lists — cell-pruned logically (equi-join) and physically
     * ([[prunedToCells]] partition resolve when `pruneDir` is set).
     * Returns the UNRANKED (probe_id, vec_id, qdist) stream. */
-  private def ivfSq8Scores(c: DataFrame, coarse: DataFrame,
-                           stats: DataFrame, codes: DataFrame,
+  private def ivfSq8Scores(c: DataFrame, index: (DataFrame, DataFrame, DataFrame),
+                           pruneDir: Option[String],
                            cellsPerProbe: Long = CellsPerProbe,
-                           pruneDir: Option[String] = None,
                            probeMax: Long = 10): DataFrame = {
-    val probeCells = withNearestCells(
-      c.filter(col("vec_id") < probeMax)
-        .select(col("vec_id").as("probe_id"), col("emb").as("p_emb"),
-          col("nrm").as("p_nrm")),
-      coarse, col("p_emb"), col("p_nrm"), cellsPerProbe)
+    val (coarse, stats, codes) = index
+    val pc = probeCells(c, coarse, cellsPerProbe, probeMax)
       .crossJoin(broadcast(sq8Fold(stats)))
       .select(col("probe_id"), col("cell"),
         sq8Code(col("p_emb")).as("pq"))
-    pruneDir.map(prunedToCells(codes, probeCells, _,
-        s"$cellsPerProbe#$probeMax"))
-      .getOrElse(codes)
-      .join(broadcast(probeCells), Seq("cell"))
+    prunedToCells(codes, pc, pruneDir, s"$cellsPerProbe#$probeMax")
+      .join(broadcast(pc), Seq("cell"))
       .filter(col("vec_id") =!= col("probe_id"))
-      .withColumn("qdist",
-        aggregate(zip_with(col("q"), col("pq"), (a, b) => (a - b) * (a - b)),
-          lit(0L), _ + _))
+      .withColumn("qdist", sq8Dist)
   }
 
   /** IVF-SQ8 search over the stored index — see [[ivfSq8Scores]]; the
     * oracle re-derives stats, cells and codes relationally; qdist is
     * exact integer, so the hash match certifies the whole stored
     * build. */
-  private val annIvfSq8: Q = (s, d) => {
-    val c = corpus(s, d)
-    val (coarse, stats, codes) = storedIvfSq8Index(s, d)
-    rankPerProbe(
-        ivfSq8Scores(c, coarse, stats, codes,
-          pruneDir = Some(Store.dir(Store.Pq, d, "sq8codes"))),
-        lit(3), col("qdist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("qdist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
-  }
-
-  /** IVF-SQ8 with exact re-ranking — the production serving form:
-    * integer-distance shortlist of the per-probe top-C(n) from the
-    * probed cells only, then [[exactRerank]] over the probes×C fetch.
-    * Rides the same stored index; the refinement cost is
-    * corpus-independent. Registry point of the (cFactor,
-    * cellsPerProbe) family — AnnFrontier sweeps the rest of the grid
-    * through [[rerankFrontier]]. */
-  private val annIvfSq8Rerank: Q =
-    rerankFrontier("q_sim_ann_ivfsq8_rerank", RerankCFactor, CellsPerProbe)
+  private val annIvfSq8: Q = (s, d) =>
+    byRank(ivfsq8StoredSearch(s, d, 10, CellsPerProbe, prune = true))
 
   /** The INCREMENTAL IVF-SQ8 index — the cell-partitioned sibling of
     * [[storedPqDayIndex]], and the first store chain whose APPEND
@@ -2113,92 +1945,68 @@ object Vectors {
     * proves chained-partitioned-append ≡ full rebuild. */
   private val annIvfSq8Day2: Q = (s, d) => {
     val c = corpus(s, d)
-    val (coarse, stats, codes) = storedIvfSq8DayIndex(s, d)
-    rankPerProbe(
-        ivfSq8Scores(c, coarse, stats, codes,
-          pruneDir = Some(Store.dir(Store.Pq, d, "sq8d1codes"))),
-        lit(3), col("qdist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("qdist"))
-      .orderBy(col("probe_id").asc, col("rn").asc)
+    byRank(nearest(ivfSq8Scores(c, storedIvfSq8DayIndex(s, d),
+      Some(Store.dir(Store.Pq, d, "sq8d1codes"))), 3, "qdist"))
   }
 
   /** Parameterized stored IVF-SQ8 search for the AnnOneProbe audit —
     * the [[ivfpqStoredSearch]] shape over the SQ8 store (probeMax
     * bounds the probe set, `prune` toggles the plan-time partition
     * resolve so the tool can measure the partitioned layout's
-    * filesRead/wall win on this family too). */
+    * filesRead/wall win on this family too). [[annIvfSq8]] is this
+    * search at the registry geometry plus [[byRank]]. */
   private[graft] def ivfsq8StoredSearch(s: SparkSession, d: String,
-      probeMax: Long, cellsPerProbe: Long, prune: Boolean): DataFrame = {
-    val c = corpus(s, d)
-    val (coarse, stats, codes) = storedIvfSq8Index(s, d)
-    rankPerProbe(
-        ivfSq8Scores(c, coarse, stats, codes, cellsPerProbe,
-          pruneDir = if (prune) Some(Store.dir(Store.Pq, d, "sq8codes")) else None,
-          probeMax = probeMax),
-        lit(3), col("qdist").asc, col("vec_id").asc)
-      .select(col("probe_id"), col("rn"), col("vec_id").as("neighbor_id"),
-        col("qdist"))
-  }
+      probeMax: Long, cellsPerProbe: Long, prune: Boolean): DataFrame =
+    nearest(ivfSq8StoredScores(s, d, corpus(s, d), probeMax, cellsPerProbe, prune),
+      3, "qdist")
 
-  /** The three production rerank searches with their SEARCH-SIDE
-    * knobs exposed: `cFactor` scales the shortlist rule
-    * C(n) = max([[RerankCMin]], ⌈cFactor·√n⌉) and `cellsPerProbe`
-    * sets nprobe = max([[NProbeMin]], ⌈ncells/cellsPerProbe⌉)
-    * (ignored by sq8, which scans all cells by construction). The
-    * registry keys ARE the (RerankCFactor, CellsPerProbe) point of
-    * this family; the AnnFrontier tool sweeps the rest of the grid
-    * against the SAME stored index — both knobs are search-time
-    * only, so the sweep never retrains or re-codes anything. */
-  private[graft] def rerankFrontier(key: String, cFactor: Double,
+  private def ivfSq8StoredScores(s: SparkSession, d: String, c: DataFrame,
+      probeMax: Long, cellsPerProbe: Long, prune: Boolean): DataFrame =
+    ivfSq8Scores(c, storedIvfSq8Index(s, d),
+      Some(Store.dir(Store.Pq, d, "sq8codes")).filter(_ => prune),
+      cellsPerProbe, probeMax)
+
+  /** SQ8 with exact re-ranking — the [[annPqRerank]] recipe on the
+    * scalar-quantized scan: integer-distance shortlist of the
+    * corpus-derived top-[[rerankClim]], then exact cosine over the
+    * probes×C fetch only. It scans all cells by construction, so it
+    * ignores `cellsPerProbe`. */
+  private[graft] val Sq8Rerank =
+    new RerankFamily("qdist", 5, (_, _, c, _) => sq8Scores(sq8Corpus(c)))
+
+  /** IVF-SQ8 with exact re-ranking — the production serving form:
+    * integer-distance shortlist of the per-probe top-C(n) from the
+    * probed cells only, then [[exactRerank]] over the probes×C fetch.
+    * Rides the same stored index as [[annIvfSq8]]; the refinement
+    * cost is corpus-independent. */
+  private[graft] val IvfSq8Rerank = new RerankFamily("qdist", 3,
+    (s, d, c, cpp) => ivfSq8StoredScores(s, d, c, 10, cpp, prune = true))
+
+  /** A production rerank search: `scores` is its unranked
+    * (probe_id, vec_id, `dist`) candidate stream over corpus `c` at
+    * nprobe divisor `cellsPerProbe`; the exact re-rank keeps `k`. The
+    * four families are the only instances. */
+  private[graft] final class RerankFamily private[Vectors] (val dist: String,
+      val k: Int, val scores: (SparkSession, String, DataFrame, Long) => DataFrame)
+
+  /** A rerank family with its SEARCH-SIDE knobs exposed: `cFactor`
+    * scales the shortlist rule C(n) = max([[RerankCMin]],
+    * ⌈cFactor·√n⌉) and `cellsPerProbe` sets nprobe =
+    * max([[NProbeMin]], ⌈ncells/cellsPerProbe⌉). The registry keys
+    * ARE the (RerankCFactor, CellsPerProbe) point of each family
+    * ([[reranked]]); the AnnFrontier tool sweeps the rest of the grid
+    * against the SAME stored index — both knobs are search-time only,
+    * so the sweep never retrains or re-codes anything. Unsorted. */
+  private[graft] def rerankFrontier(f: RerankFamily, cFactor: Double,
       cellsPerProbe: Long): Q = (s, d) => {
     val c = corpus(s, d)
-    key match {
-      case "q_sim_ann_ivfpq_rerank" =>
-        val (coarse, book, ccodes) = storedIvfPqIndex(s, d)
-        val shortlist = rankPerProbe(
-            ivfpqScores(c, coarse, book, ccodes, cellsPerProbe,
-              pruneDir = Some(Store.dir(Store.Pq, d, "ivfcodes")))
-              .crossJoin(broadcast(rerankClim(c, cFactor))),
-            col("c_lim"), col("adist").asc, col("vec_id").asc)
-          .select(col("probe_id"), col("vec_id"))
-        exactRerank(c, shortlist, 3)
-      case "q_sim_ann_ivfpq_residual_rerank" =>
-        val (coarse, book, ccodes) = storedIvfPqResidualIndex(s, d)
-        val shortlist = rankPerProbe(
-            residualScores(c, coarse, book, ccodes, cellsPerProbe,
-              pruneDir = Some(Store.dir(Store.Pq, d, "rescodes")))
-              .crossJoin(broadcast(rerankClim(c, cFactor))),
-            col("c_lim"), col("adist").asc, col("vec_id").asc)
-          .select(col("probe_id"), col("vec_id"))
-        exactRerank(c, shortlist, 3)
-      case "q_sim_ann_ivfsq8_rerank" =>
-        val (coarse, stats, codes) = storedIvfSq8Index(s, d)
-        val shortlist = rankPerProbe(
-            ivfSq8Scores(c, coarse, stats, codes, cellsPerProbe,
-              pruneDir = Some(Store.dir(Store.Pq, d, "sq8codes")))
-              .crossJoin(broadcast(rerankClim(c, cFactor))),
-            col("c_lim"), col("qdist").asc, col("vec_id").asc)
-          .select(col("probe_id"), col("vec_id"))
-        exactRerank(c, shortlist, 3)
-      case "q_sim_ann_sq8_rerank" =>
-        val qc = sq8Corpus(c)
-        val probes = qc.filter(col("vec_id") < 10)
-          .select(col("vec_id").as("probe_id"), col("q").as("pq"))
-        val scored = qc.crossJoin(broadcast(probes))
-          .filter(col("vec_id") =!= col("probe_id"))
-          .withColumn("qdist",
-            aggregate(zip_with(col("q"), col("pq"),
-              (a, b) => (a - b) * (a - b)), lit(0L), _ + _))
-          .crossJoin(broadcast(rerankClim(c, cFactor)))
-        val shortlist = rankPerProbe(scored, col("c_lim"),
-            col("qdist").asc, col("vec_id").asc)
-          .select(col("probe_id"), col("vec_id"))
-        exactRerank(c, shortlist, 5)
-      case other => throw new IllegalArgumentException(
-        s"rerankFrontier knows no key $other")
-    }
+    exactRerank(c,
+      shortlist(c, f.scores(s, d, c, cellsPerProbe), f.dist, cFactor), f.k)
   }
+
+  /** A rerank family's registry key, in rank order. */
+  private def reranked(f: RerankFamily): Q = (s, d) =>
+    byRank(rerankFrontier(f, RerankCFactor, CellsPerProbe)(s, d))
 
   /** Multimodal join: text features ⊕ vector features per document. */
   private val multimodalJoin: Q = (s, d) => {
@@ -2318,9 +2126,9 @@ object Vectors {
     "q_sim_ann_pq_sampled"  -> annPqSampled,
     "q_sim_ann_ivfpq_residual" -> annIvfPqResidual,
     "q_sim_ann_ivfpq_residual_stored" -> annIvfPqResidualStored,
-    "q_sim_ann_ivfpq_residual_rerank" -> annIvfPqResidualRerank,
+    "q_sim_ann_ivfpq_residual_rerank" -> reranked(ResidualRerank),
     "q_sim_ann_sq8"         -> annSq8,
-    "q_sim_ann_sq8_rerank"  -> annSq8Rerank,
+    "q_sim_ann_sq8_rerank"  -> reranked(Sq8Rerank),
     "q_sim_kmeans"        -> simKmeans,
     "q_dedup_semantic"    -> dedupSemantic,
     "q_embed_pq"          -> embedPq,
@@ -2330,12 +2138,12 @@ object Vectors {
     "q_sim_ann_pq_day2"   -> annPqDay2,
     "q_sim_ann_ivfpq"     -> annIvfPq,
     "q_sim_ann_ivfpq_stored" -> annIvfPqStored,
-    "q_sim_ann_ivfpq_rerank" -> annIvfPqRerank,
+    "q_sim_ann_ivfpq_rerank" -> reranked(IvfPqRerank),
     "q_sim_ann_ivfpq_split"  -> annIvfPqSplit,
     "q_sim_ann_cell_stats"  -> annCellStats,
     "q_sim_ann_scan_frac"   -> annScanFrac,
     "q_sim_ann_ivfsq8"        -> annIvfSq8,
-    "q_sim_ann_ivfsq8_rerank" -> annIvfSq8Rerank,
+    "q_sim_ann_ivfsq8_rerank" -> reranked(IvfSq8Rerank),
     "q_sim_ann_ivfsq8_day2"   -> annIvfSq8Day2,
     "q_dedup_embedding"   -> embDedup,
     "q_multimodal_join"   -> multimodalJoin,

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.ops.Vectors
 
@@ -24,15 +23,7 @@ object AnnFrontier {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val outPath = if (args.length > 1) Some(args(1)) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.install(spark)
+    val spark = graft.GraftSession.local()
 
     def timed[A](f: => A): (A, Double) = {
       val t0 = System.nanoTime()
@@ -47,21 +38,23 @@ object AnnFrontier {
     }
     val nTruth = truth.count().toDouble
 
-    val ivfKeys = Seq("q_sim_ann_ivfpq_rerank", "q_sim_ann_ivfpq_residual_rerank",
-      "q_sim_ann_ivfsq8_rerank")
+    val ivfKeys = Seq("q_sim_ann_ivfpq_rerank" -> Vectors.IvfPqRerank,
+      "q_sim_ann_ivfpq_residual_rerank" -> Vectors.ResidualRerank,
+      "q_sim_ann_ivfsq8_rerank" -> Vectors.IvfSq8Rerank)
+    val sq8Key = "q_sim_ann_sq8_rerank" -> Vectors.Sq8Rerank
     val cFactors = Seq(1.0, 3.0, 5.0)
     val cpps = Seq(8L, 4L, 2L)
     // warm pass so every store is built OUTSIDE the timed grid — the
     // grid then measures search cost only, the economics a reader of
     // this artifact is tuning
-    (ivfKeys :+ "q_sim_ann_sq8_rerank").foreach { k =>
+    (ivfKeys :+ sq8Key).foreach { case (k, _) =>
       graft.SparkEntry.queries(k)(spark, sfDir).count()
     }
     val grid =
       (for { k <- ivfKeys; cf <- cFactors; cpp <- cpps } yield (k, cf, Some(cpp))) ++
-        cFactors.map(cf => ("q_sim_ann_sq8_rerank", cf, None))
-    val rows = grid.map { case (k, cf, cppOpt) =>
-      val q = Vectors.rerankFrontier(k, cf, cppOpt.getOrElse(1L))
+        cFactors.map(cf => (sq8Key, cf, None))
+    val rows = grid.map { case ((k, family), cf, cppOpt) =>
+      val q = Vectors.rerankFrontier(family, cf, cppOpt.getOrElse(1L))
       val (got, secs) = timed {
         q(spark, sfDir).filter(col("rn") <= 3)
           .select("probe_id", "neighbor_id").localCheckpoint()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dedup-pipeline diagnostics: candidate volume, verify volume, LSH
@@ -15,15 +14,7 @@ object DedupStats {
   def main(args: Array[String]): Unit = {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
     val withExact = args.length < 2 || args(1) != "--no-exact"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.install(spark)
+    val spark = graft.GraftSession.local()
 
     def timed[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime()

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 import scala.util.control.NonFatal
@@ -23,15 +22,7 @@ object ProbeKey {
     val sfDir = args(0)
     val keys = args(1).split(",").toSeq
     val passes = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.GraftSession.install(spark)
+    val spark = graft.GraftSession.local()
 
     case class StageRec(id: Int, name: String, tasks: Int,
                         submitted: Long, completed: Long)

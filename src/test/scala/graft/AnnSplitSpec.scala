@@ -1,7 +1,10 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
+import graft.io.Store
 
 /** The hot-cell split/rebalance generation (round-16 verdict #2).
   *
@@ -22,15 +25,29 @@ import org.scalatest.funsuite.AnyFunSuite
   *  4. the rebalanced child-probe search returns the full per-probe
   *     result set with BOUNDED scanned rows per probe.
   */
-class AnnSplitSpec extends AnyFunSuite {
+class AnnSplitSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = SparkTestSession.spark
   private val sf = SparkTestSession.sf
 
+  private var skewBuilt = false
   private lazy val skewDir: String = {
     val out = "/tmp/graft-skewvec-spec"
     graft.tools.GenSf.run(spark, sf, out, 2, "skewvec")
+    skewBuilt = true
     out
   }
+
+  /** The skewvec fixture is regenerated on every run, so its content
+    * stamp — and with it every store name built on it — is new each
+    * time and never read again: remove the fixture and its stores
+    * (named while the fixture still stamps them) with their locks. */
+  override def afterAll(): Unit =
+    try if (skewBuilt) {
+      val stores = Seq("coarse", "codebook", "ivfcodes", "splitcents",
+        "splitcodes").map(Store.dir(Store.Pq, skewDir, _))
+      (stores ++ stores.map(_ + ".lock") :+ skewDir)
+        .foreach(p => FileUtils.deleteQuietly(new java.io.File(p)))
+    } finally super.afterAll()
 
   private def collectSet(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),

@@ -1715,6 +1715,28 @@ class OperatorSpec extends AnyFunSuite {
     } finally ivfpq.unpersist()
   }
 
+  test("cell pruning is a row no-op for every cell-partitioned search") {
+    import graft.ops.Vectors.{CellsPerProbe, ivfpqSplitSearch,
+      ivfpqStoredSearch, ivfsq8StoredSearch}
+    // (probeMax, cellsPerProbe, prune) => rows, per stored family
+    val families = Seq[(String, (Long, Long, Boolean) => org.apache.spark.sql.DataFrame)](
+      "ivfpq" -> (ivfpqStoredSearch(spark, sf, _, _, _)),
+      "ivfsq8" -> (ivfsq8StoredSearch(spark, sf, _, _, _)),
+      "split-parent" -> ((p, c, pr) =>
+        ivfpqSplitSearch(spark, sf, p, c, childProbe = false, prune = pr)),
+      "split-child" -> ((p, c, pr) =>
+        ivfpqSplitSearch(spark, sf, p, c, childProbe = true, prune = pr)))
+    // the registry geometry, and the 1-probe floor (nprobe = NProbeMin),
+    // where the resolved cells are a strict subset and the filter prunes
+    for ((fam, search) <- families;
+         (probeMax, cpp) <- Seq((10L, CellsPerProbe), (1L, Long.MaxValue))) {
+      val pruned = search(probeMax, cpp, true).collect().toSet
+      val flat = search(probeMax, cpp, false).collect().toSet
+      assert(pruned.nonEmpty && pruned == flat,
+        s"$fam at probeMax=$probeMax, cellsPerProbe=$cpp: pruning changed the rows")
+    }
+  }
+
   test("temperature mixing: weights normalize and rebalance toward rare") {
     val m = SparkEntry.queries("q_mix_temperature")(spark, sf).collect()
     val wSum = m.map(_.getAs[Double]("temp_weight")).sum
