@@ -118,19 +118,26 @@ object Store {
     * is not a store of one of `families` under the current tokens:
     * superseded versions, old layouts and dead `.tmp-` build dirs, each
     * with its `.lock` sibling (a lock is judged by the dir it guards and
-    * stays while that dir is recent). Best-effort: a failed delete is
-    * ignored. */
+    * stays while that dir is recent). Of the current-token stores of one
+    * fixture and kind (names equal up to the stamp), only the newest by
+    * mtime is current: the others are generations of a fixture that has
+    * since been regenerated. Best-effort: a failed delete is ignored. */
   private[graft] def sweep(root: File, families: Seq[Family], nowMs: Long): Unit = {
     val current = families.map(f =>
       s"t.+-[A-Za-z0-9]+${java.util.regex.Pattern.quote(f.token)}[0-9a-f]{12}")
-    def stale(name: String) =
-      name.contains(".tmp-") || !current.exists(name.matches)
-    try listing(root).filter { f =>
-      val guarded = new File(root, f.getName.stripSuffix(".lock"))
-      stale(guarded.getName) &&
-        (f.lastModified() max guarded.lastModified()) < nowMs - SweepGraceMs
-    }.foreach(rm)
-    catch { case NonFatal(_) => () }
+    def tokenCurrent(name: String) =
+      !name.contains(".tmp-") && current.exists(name.matches)
+    try {
+      val entries = listing(root)
+      val superseded = entries.filter(f => tokenCurrent(f.getName))
+        .groupBy(_.getName.dropRight(12)).values
+        .flatMap(_.sortBy(-_.lastModified()).tail.map(_.getName)).toSet
+      entries.filter { f =>
+        val guarded = new File(root, f.getName.stripSuffix(".lock"))
+        (!tokenCurrent(guarded.getName) || superseded(guarded.getName)) &&
+          (f.lastModified() max guarded.lastModified()) < nowMs - SweepGraceMs
+      }.foreach(rm)
+    } catch { case NonFatal(_) => () }
   }
 
   /** Runs once per JVM, and only under BUILT-IN default roots: a root

@@ -1244,6 +1244,10 @@ object Dedup {
       .join(deg.select(col("u").as("doc_id"), col("deg")), Seq("doc_id"), "left")
       .select(col("doc_id"), lit(10000L).as("rank_q"), col("deg"))
       .localCheckpoint()
+    // each checkpoint is eager, so the frame it read is never read
+    // again — release it, or a long-lived session keeps every round's
+    // blocks
+    releaseCheckpoint(deg)
     for (_ <- 1 to PrRounds) {
       val inbound = ranks
         .filter(col("deg").isNotNull)
@@ -1251,7 +1255,7 @@ object Dedup {
           floor(col("rank_q") / col("deg")).as("c_q"))
         .join(both.select(col("u").as("src"), col("w")), "src")
         .groupBy(col("w")).agg(sum(col("c_q")).as("in_q"))
-      ranks = ranks
+      val next = ranks
         .join(inbound.select(col("w").as("doc_id"), col("in_q")),
           Seq("doc_id"), "left")
         .select(col("doc_id"),
@@ -1259,6 +1263,8 @@ object Dedup {
             floor(coalesce(col("in_q"), lit(0L)) * lit(PrDamping)))
             .as("rank_q"), col("deg"))
         .localCheckpoint()
+      releaseCheckpoint(ranks)
+      ranks = next
     }
     // every round is materialized (eager checkpoints); the returned
     // plan reads only the final ranks — release the disk copy
@@ -1267,6 +1273,17 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("deg"), lit(0L)).as("degree"),
         col("rank_q"))
   }
+
+  /** Drop the blocks of a `localCheckpoint`ed frame. `Dataset.unpersist`
+    * only removes CacheManager entries, which a checkpoint has none of:
+    * its RDD stays persisted until the ContextCleaner happens to collect
+    * the frame. Only for frames nothing will read again — a checkpoint's
+    * blocks cannot be recomputed. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false); ()
+      case _ => ()
+    }
 
   private val pagerank: Q = (s, d) =>
     pagerankRanks(s, d)

@@ -1,7 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.{Dataset, Encoders}
 
 /** Streaming derivation of the op-typed mutation stream — the relay
   * side of the reference, as a typed stateful fold.
@@ -15,6 +14,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * liveness — O(keys), not O(events)), so a continuous CDC feed emits
   * ops as it arrives instead of re-windowing the history. ApplySpec
   * asserts the batch/stream/declared-query three-way agreement.
+  *
+  * The pure transition [[step]] is the spec. [[KeyedFold]] is the one
+  * runner: keyed by `user_id` and ordered by `event_id`, it runs
+  * [[step]] as the plain fold [[run]], the batch twin [[deriveBatch]]
+  * and the streaming form [[deriveStream]].
   *
   * Ordering contract: within a key, events must arrive in sequence
   * order (pgshovel's publisher guarantees exactly this; the FSM in
@@ -56,41 +60,18 @@ object Apply {
         Some(Op(m.user_id, m.event_id, "insert",
           None, None, Some(m.event_type), Some(m.value))))
 
-  /** Fold one key's events (already in sequence order); linear in the
-    * slice (ops accumulate in a builder). */
+  private val fold = new KeyedFold[Long, Mutation, KeyState, Op](
+    _.user_id, Ordering.by(_.event_id), initialState, step)(
+    Encoders.scalaLong, Encoders.product[KeyState], Encoders.product[Op])
+
+  /** Fold one key's events (already in sequence order). */
   def run(ms: Iterator[Mutation], init: KeyState = initialState)
-      : (KeyState, List[Op]) = {
-    val ops = List.newBuilder[Op]
-    val last = ms.foldLeft(init) { (st, m) =>
-      val (st2, op) = step(st, m)
-      ops ++= op
-      st2
-    }
-    (last, ops.result())
-  }
+      : (KeyState, List[Op]) = fold.run(ms, init)
 
   /** Batch twin: derive ops from a recorded feed. */
-  def deriveBatch(events: Dataset[Mutation]): Dataset[Op] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id).flatMapGroups { (_, it) =>
-      run(it.toSeq.sortBy(_.event_id).iterator)._2
-    }
-  }
+  def deriveBatch(events: Dataset[Mutation]): Dataset[Op] = fold.batch(events)
 
   /** Streaming form: one state-store entry per key; ops append per
     * micro-batch. */
-  def deriveStream(events: Dataset[Mutation]): Dataset[Op] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[KeyState, Op](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, it: Iterator[Mutation], state: GroupState[KeyState]) =>
-          val init = state.getOption.getOrElse(initialState)
-          val (st, ops) = run(it.toSeq.sortBy(_.event_id).iterator, init)
-          state.update(st)
-          ops.iterator
-      }
-  }
+  def deriveStream(events: Dataset[Mutation]): Dataset[Op] = fold.stream(events)
 }

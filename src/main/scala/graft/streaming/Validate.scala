@@ -1,8 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TimeMode, TimerValues}
+import org.apache.spark.sql.{Dataset, Encoders}
 
 /** Transaction-bracket stream validation — the reference's consumer-side
   * state machine recast as a typed Spark fold.
@@ -16,24 +14,23 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Violations are emitted as rows, never thrown, so a bad publisher
   * cannot kill the pipeline.
   *
-  * The transition function [[step]] is a pure fold shared verbatim by:
-  *  - [[validateBatch]]: `groupByKey(publisher).flatMapGroups` over a
-  *    recorded stream (per-group in-memory sort — groups are per
-  *    publisher, bounded by the relay's batch size at the reference);
-  *  - [[validateStream]]: `flatMapGroupsWithState` under Structured
-  *    Streaming — state lives in the state store (RocksDB at scale),
-  *    one entry per publisher, so state size is O(publishers), not
-  *    O(messages).
+  * The pure transition [[step]] is the spec. [[KeyedFold]] is the one
+  * runner: keyed by publisher and ordered by `seq`, it runs [[step]] as
+  * the plain fold [[run]], the batch twin [[validateBatch]] and the
+  * streaming form [[validateStream]] (one state-store entry per
+  * publisher, so state size is O(publishers), not O(messages)).
   *
-  * Batch/stream parity of the two is asserted in ValidateSpec, and FSM
-  * laws (well-formed accepted; injected gaps/duplicates/bracket breaks
+  * Batch/stream parity is asserted in ValidateSpec (in-memory and
+  * RocksDB state, and across a checkpoint restart), and FSM laws
+  * (well-formed accepted; injected gaps/duplicates/bracket breaks
   * detected) are ScalaCheck properties.
   *
   * The group layer ([[GMsg]], [[stepGroup]]) adds pgshovel's
   * publisher-failover acceptance (SURVEY §3.1 E3): a new publisher
   * legally supersedes the old one mid-stream (audited `handoff`, with
   * the implied abort of an unfinished transaction), and a superseded
-  * publisher can never re-enter (`stale_publisher`).
+  * publisher can never re-enter (`stale_publisher`). It is a second
+  * [[KeyedFold]] instance, keyed by group and ordered by `arrival`.
   */
 object Validate {
 
@@ -75,74 +72,20 @@ object Validate {
     }
   }
 
-  /** Fold a publisher's messages (already in arrival order); linear in
-    * the slice (violations accumulate in a builder). */
+  private val fold = new KeyedFold[String, Msg, TxnState, Violation](
+    _.publisher, Ordering.by(_.seq), initialState, step)(
+    Encoders.STRING, Encoders.product[TxnState], Encoders.product[Violation])
+
+  /** Fold a publisher's messages (already in arrival order). */
   def run(msgs: Iterator[Msg], init: TxnState = initialState)
-      : (TxnState, List[Violation]) = {
-    val out = List.newBuilder[Violation]
-    val last = msgs.foldLeft(init) { (st, m) =>
-      val (st2, vs) = step(st, m)
-      out ++= vs
-      st2
-    }
-    (last, out.result())
-  }
+      : (TxnState, List[Violation]) = fold.run(msgs, init)
 
   /** Batch twin: validate a recorded stream. */
-  def validateBatch(msgs: Dataset[Msg]): Dataset[Violation] = {
-    val spark = msgs.sparkSession
-    import spark.implicits._
-    msgs.groupByKey(_.publisher).flatMapGroups { (_, it) =>
-      run(it.toSeq.sortBy(_.seq).iterator)._2
-    }
-  }
-
-  /** The same FSM on the Spark 4 `transformWithState` API — the
-    * successor to flatMapGroupsWithState: explicit typed state handles
-    * from the StatefulProcessorHandle, per-key timers, and state
-    * schema evolution. Behavior is identical to [[validateStream]]
-    * (ValidateSpec asserts parity); both fold with [[step]]. */
-  class ValidateProcessor extends StatefulProcessor[String, Msg, Violation] {
-    @transient private var state:
-      org.apache.spark.sql.streaming.ValueState[TxnState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[TxnState]("txn",
-        Encoders.product[TxnState], org.apache.spark.sql.streaming.TTLConfig.NONE)
-
-    override def handleInputRows(key: String, rows: Iterator[Msg],
-        timerValues: TimerValues): Iterator[Violation] = {
-      val init = Option(state.get()).getOrElse(initialState)
-      val (st, vs) = run(rows.toSeq.sortBy(_.seq).iterator, init)
-      state.update(st)
-      vs.iterator
-    }
-  }
-
-  /** Streaming validation on transformWithState. */
-  def validateStreamTws(msgs: Dataset[Msg]): Dataset[Violation] = {
-    val spark = msgs.sparkSession
-    import spark.implicits._
-    msgs.groupByKey(_.publisher)
-      .transformWithState(new ValidateProcessor,
-        TimeMode.None(), OutputMode.Append())
-  }
+  def validateBatch(msgs: Dataset[Msg]): Dataset[Violation] = fold.batch(msgs)
 
   /** Streaming form: one state-store entry per publisher; violations
     * append per micro-batch. */
-  def validateStream(msgs: Dataset[Msg]): Dataset[Violation] = {
-    val spark = msgs.sparkSession
-    import spark.implicits._
-    msgs.groupByKey(_.publisher)
-      .flatMapGroupsWithState[TxnState, Violation](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, it: Iterator[Msg], state: GroupState[TxnState]) =>
-          val init = state.getOption.getOrElse(initialState)
-          val (st, vs) = run(it.toSeq.sortBy(_.seq).iterator, init)
-          state.update(st)
-          vs.iterator
-      }
-  }
+  def validateStream(msgs: Dataset[Msg]): Dataset[Violation] = fold.stream(msgs)
 
   // ------------------------------------------------- publisher failover
 
@@ -207,42 +150,21 @@ object Validate {
     }
   }
 
-  /** Fold a group's messages (already in arrival order); linear in the
-    * slice, like [[run]]. */
+  private val groupFold = new KeyedFold[String, GMsg, GroupTxnState, GroupEvent](
+    _.group, Ordering.by(_.arrival), initialGroupState, stepGroup)(
+    Encoders.STRING, Encoders.product[GroupTxnState], Encoders.product[GroupEvent])
+
+  /** Fold a group's messages (already in arrival order). */
   def runGroup(msgs: Iterator[GMsg],
                init: GroupTxnState = initialGroupState)
-      : (GroupTxnState, List[GroupEvent]) = {
-    val out = List.newBuilder[GroupEvent]
-    val last = msgs.foldLeft(init) { (st, m) =>
-      val (st2, es) = stepGroup(st, m)
-      out ++= es
-      st2
-    }
-    (last, out.result())
-  }
+      : (GroupTxnState, List[GroupEvent]) = groupFold.run(msgs, init)
 
   /** Batch twin: validate a recorded group stream. */
-  def validateGroupBatch(msgs: Dataset[GMsg]): Dataset[GroupEvent] = {
-    val spark = msgs.sparkSession
-    import spark.implicits._
-    msgs.groupByKey(_.group).flatMapGroups { (_, it) =>
-      runGroup(it.toSeq.sortBy(_.arrival).iterator)._2
-    }
-  }
+  def validateGroupBatch(msgs: Dataset[GMsg]): Dataset[GroupEvent] =
+    groupFold.batch(msgs)
 
   /** Streaming form: one state-store entry per GROUP (not per
     * publisher), so failover state survives the publisher change. */
-  def validateGroupStream(msgs: Dataset[GMsg]): Dataset[GroupEvent] = {
-    val spark = msgs.sparkSession
-    import spark.implicits._
-    msgs.groupByKey(_.group)
-      .flatMapGroupsWithState[GroupTxnState, GroupEvent](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (_, it: Iterator[GMsg], state: GroupState[GroupTxnState]) =>
-          val init = state.getOption.getOrElse(initialGroupState)
-          val (st, es) = runGroup(it.toSeq.sortBy(_.arrival).iterator, init)
-          state.update(st)
-          es.iterator
-      }
-  }
+  def validateGroupStream(msgs: Dataset[GMsg]): Dataset[GroupEvent] =
+    groupFold.stream(msgs)
 }

@@ -12,7 +12,7 @@ import graft.ops.Vectors
   * This tool runs the SAME stored index at the geometry a production
   * ANN service actually serves — ONE query vector, nprobe at its floor
   * — and records, per configuration, the inverted-list scan's
-  * filesRead / partsRead / staticFiles plus wall seconds, pruned vs
+  * filesRead / partsRead plus wall seconds, pruned vs
   * flat (pruning disabled = what a non-partitioned layout must read):
   *
   *   - `ten_probe_default`: the registry point (10 probes, derived
@@ -97,8 +97,7 @@ object AnnOneProbe {
         scan.flatMap(_.metrics.get(key)).map(_.value).getOrElse(-1L)
       f""" {"family":"$fam","config":"$label","rows":$n,"secs":$secs%.2f,""" +
         f""""secs_first":$secsFirst%.2f,""" +
-        s""""files_read":${m("numFiles")},"parts_read":${m("numPartitions")},""" +
-        s""""static_files":${m("staticFilesNum")}}"""
+        s""""files_read":${m("numFiles")},"parts_read":${m("numPartitions")}}"""
     }
     val line = s"""{"sf_dir":"$sfDir","rows":[${rows.mkString(",").trim}]}"""
     println(line)

@@ -1308,6 +1308,21 @@ class OperatorSpec extends AnyFunSuite {
       .exists(_.getAs[Double]("rank") > 0.15))
   }
 
+  test("pagerank: superseded round checkpoints are released") {
+    // only the final round's checkpoint may outlive the loop: the
+    // returned plan reads it, and nothing reads deg, the initial ranks,
+    // the earlier rounds or the edge cache again
+    import spark.implicits._
+    val nodes = spark.range(0, 12).select(col("id").as("doc_id"))
+    val pairs = Seq((0L, 1L), (1L, 2L), (3L, 4L), (5L, 6L), (6L, 7L))
+      .toDF("a_id", "b_id")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ranks = graft.ops.Dedup.pagerankLoop(nodes, pairs)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size <= 1, s"${added.size} persistent RDDs left behind")
+    assert(ranks.count() == 12)
+  }
+
   test("leakage-safe split: clusters pure, no verify pair crosses, doc split leaks") {
     val sp = SparkEntry.queries("q_split_leakage_safe")(spark, sf).cache()
     try {

@@ -85,20 +85,27 @@ class StoreSpec extends AnyFunSuite {
     }
     def current(f: Store.Family, kind: String) =
       new File(Store.dir(f, "/nonexistent/fx", kind)).getName
+    // the same fixture and kind under an older fixture stamp
+    def superseded(f: Store.Family, kind: String) =
+      current(f, kind).dropRight(12) + "0123456789ab"
     val keep = Seq(
       entry(current(Store.Dedup, "pairs"), old),
       entry(current(Store.Dedup, "pairs") + ".lock", old, dir = false),
       entry(current(Store.Tf, "tf0"), old),
       entry("t_fx-pairs-v3-0123456789ab", now), // stale, inside the grace
       entry("t_fx-pairs-v3-0123456789ab.lock", old, dir = false),
-      entry(current(Store.Dedup, "labels") + ".tmp-3-4", now))
+      entry(current(Store.Dedup, "labels") + ".tmp-3-4", now),
+      entry(current(Store.Dedup, "ranks"), now),
+      entry(superseded(Store.Dedup, "ranks"), now - 60000L)) // inside the grace
     val gone = Seq(
       entry("t_fx-labels-v3-0123456789ab", old), // pre-family layout
       entry("t_fx-labels-v3-0123456789ab.lock", old, dir = false),
       entry(s"t_fx-pairs-v${Store.FormatVersion}.d0-0123456789ab", old),
       entry("t_fx-v3.p8-0123456789ab", old), // old nested PQ index
       entry(current(Store.Pq, "codes"), old), // not a family of this root
-      entry(current(Store.Dedup, "ranks") + ".tmp-1-2", old))
+      entry(current(Store.Dedup, "ranks") + ".tmp-1-2", old),
+      entry(superseded(Store.Dedup, "pairs"), old - 60000L), // older generation
+      entry(superseded(Store.Dedup, "pairs") + ".lock", old, dir = false))
     Store.sweep(r, Seq(Store.Dedup, Store.Tf), now)
     keep.foreach(f => assert(f.exists(), s"${f.getName} was swept"))
     gone.foreach(f => assert(!f.exists(), s"${f.getName} survived the sweep"))

@@ -4,7 +4,8 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import graft.SparkTestSession
-import Validate.{Msg, TxnState, Violation, initialState, validateBatch, validateStream, validateStreamTws}
+import org.apache.spark.sql.Encoders
+import Validate.{Msg, TxnState, Violation, initialState, validateBatch, validateStream}
 import Validate.{GMsg, GroupEvent, runGroup, validateGroupBatch, validateGroupStream}
 import Validate.{run => foldMsgs}
 
@@ -77,23 +78,37 @@ class ValidateSpec extends AnyFunSuite {
     })
   }
 
-  test("transformWithState FSM agrees with flatMapGroupsWithState FSM") {
-    val msgs = wellFormed("a", 3, 2) ++
-      wellFormed("b", 2, 1).filterNot(_.seq == 1) ++
-      List(Msg("c", 0, "mutation"))
-    // transformWithState requires the RocksDB state store provider
+  test("FSM stream restarted from its RocksDB checkpoint agrees with batch") {
+    // the keyed-fold state must survive a query restart: epoch 1 leaves
+    // publisher b inside an open transaction, epoch 2 (read by a NEW
+    // query on the same checkpoint) redelivers one of b's messages and
+    // closes the transaction — a duplicate only restored state can see
+    val e1 = wellFormed("a", 1, 1) ++
+      List(Msg("b", 0, "begin"), Msg("b", 1, "mutation"))
+    val e2 = List(Msg("b", 1, "mutation"), Msg("b", 2, "mutation"),
+      Msg("b", 3, "commit"), Msg("a", 4, "begin"))
     val s2 = SparkTestSession.rocksSession
-    val mem2 = MemoryStream[Msg](s2)
-    val q = validateStreamTws(mem2.toDS()).writeStream
-      .format("memory").queryName(s"tws_${System.nanoTime()}")
-      .outputMode("append").start()
-    val (e1, e2) = msgs.splitAt(msgs.size / 2)
-    mem2.addData(e1); q.processAllAvailable()
-    mem2.addData(e2); q.processAllAvailable()
-    val streamed = s2.table(q.name).as[Violation].collect().toSet
-    q.stop()
-    val batch = validateBatch(spark.createDataset(msgs)).collect().toSet
-    assert(streamed == batch)
+    val root = java.nio.file.Files.createTempDirectory("graft-fsm-ckpt-").toFile
+    val src = new java.io.File(root, "src").getPath
+    val ckpt = new java.io.File(root, "ckpt").getPath
+    def feed(ms: Seq[Msg]): Unit =
+      s2.createDataset(ms).repartition(1).write.mode("append").parquet(src)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Violation]()
+    def runQuery(): Unit = {
+      val q = validateStream(s2.readStream.schema(Encoders.product[Msg].schema)
+          .parquet(src).as[Msg])
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[Violation], _: Long) =>
+          b.collect().foreach(seen.add); ()
+        }
+        .outputMode("append").start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    feed(e1); runQuery()
+    feed(e2); runQuery()
+    val streamed = seen.toArray(Array.empty[Violation]).toSet
+    assert(streamed == validateBatch(spark.createDataset(e1 ++ e2)).collect().toSet)
+    assert(streamed.map(_.kind) == Set("duplicate", "sequence_gap"))
   }
 
   // ---------------------------------------------- publisher failover
