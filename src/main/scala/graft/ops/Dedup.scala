@@ -1210,25 +1210,14 @@ object Dedup {
     * per-node), so ranks computed on a component's induced subgraph
     * equal its ranks in the full graph, bit for bit. */
   private[graft] def pagerankLoop(nodes: DataFrame, pairs: DataFrame): DataFrame = {
-    // DISK_ONLY, not localCheckpoint, for the directed edge stream —
-    // the one corpus-scale intermediate here (75 M rows at sf1). A
-    // heap-backed checkpoint pins it in executor memory across all
-    // five rounds: measured at sf1 that old-gen pressure failed the
-    // query outright AND poisoned every later query in the same JVM
-    // (65 suite failures) — the identical failure mode
-    // [[connectedComponentsStar]] documents for its raw pair set. On
-    // disk each round pays one deserialize; the heap holds nothing.
-    val both = pairs.select(col("a_id").as("u"), col("b_id").as("w"))
-      .unionAll(pairs.select(col("b_id").as("u"), col("a_id").as("w")))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // materialize before the first multi-branch read: the union's two
-    // branches otherwise race past the still-empty cache and each
-    // re-run the `pairs` lineage (connectedComponentsStar's fix,
-    // applied here — pairs is a cheap stored scan for q_dedup_pagerank
-    // but a semi-joined induced subgraph for the day-2 refresh)
-    both.count()
-    // node-sized → heap checkpoint is right; materializing it also
-    // materializes `both` into the disk store
+    // the directed edge stream is the one corpus-scale intermediate
+    // here: on disk, materialized once — pairs is a cheap stored scan
+    // for q_dedup_pagerank but a semi-joined induced subgraph for the
+    // day-2 refresh
+    val both = Iterate.onDisk(
+      pairs.select(col("a_id").as("u"), col("b_id").as("w"))
+        .unionAll(pairs.select(col("b_id").as("u"), col("a_id").as("w"))))
+    // node-sized → heap checkpoint is right
     val deg = both.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     // deg rides INSIDE the per-round rank table (r17): the old shape
@@ -1240,50 +1229,33 @@ object Dedup {
     // agg, one broadcast join back — identical integer arithmetic
     // (deg-less nodes contributed nothing before via the inner deg
     // join; they contribute nothing now via the null filter).
-    var ranks = nodes
+    val ranks0 = nodes
       .join(deg.select(col("u").as("doc_id"), col("deg")), Seq("doc_id"), "left")
       .select(col("doc_id"), lit(10000L).as("rank_q"), col("deg"))
       .localCheckpoint()
-    // each checkpoint is eager, so the frame it read is never read
-    // again — release it, or a long-lived session keeps every round's
-    // blocks
-    releaseCheckpoint(deg)
-    for (_ <- 1 to PrRounds) {
-      val inbound = ranks
+    Iterate.release(deg)
+    val ranks = Iterate.rounds(ranks0, PrRounds) { prev =>
+      val inbound = prev
         .filter(col("deg").isNotNull)
         .select(col("doc_id").as("src"),
           floor(col("rank_q") / col("deg")).as("c_q"))
         .join(both.select(col("u").as("src"), col("w")), "src")
         .groupBy(col("w")).agg(sum(col("c_q")).as("in_q"))
-      val next = ranks
+      prev
         .join(inbound.select(col("w").as("doc_id"), col("in_q")),
           Seq("doc_id"), "left")
         .select(col("doc_id"),
           (lit(1500L) +
             floor(coalesce(col("in_q"), lit(0L)) * lit(PrDamping)))
             .as("rank_q"), col("deg"))
-        .localCheckpoint()
-      releaseCheckpoint(ranks)
-      ranks = next
     }
-    // every round is materialized (eager checkpoints); the returned
-    // plan reads only the final ranks — release the disk copy
-    both.unpersist(false)
+    // every round is materialized; the returned plan reads only the
+    // final ranks
+    Iterate.release(both)
     ranks
       .select(col("doc_id"), coalesce(col("deg"), lit(0L)).as("degree"),
         col("rank_q"))
   }
-
-  /** Drop the blocks of a `localCheckpoint`ed frame. `Dataset.unpersist`
-    * only removes CacheManager entries, which a checkpoint has none of:
-    * its RDD stays persisted until the ContextCleaner happens to collect
-    * the frame. Only for frames nothing will read again — a checkpoint's
-    * blocks cannot be recomputed. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false); ()
-      case _ => ()
-    }
 
   private val pagerank: Q = (s, d) =>
     pagerankRanks(s, d)
@@ -1366,61 +1338,42 @@ object Dedup {
   /** Delta-iteration min-label propagation — the O(diameter)-round
     * alternative kept as a differential twin for the spec (near-dup
     * components are dense, so on THIS corpus it converges in O(few)
-    * rounds; the declared query uses the star path above because a
+    * rounds; the declared query uses the star path below because a
     * 100 TB graph offers no such diameter guarantee). label(v) ←
-    * min(label(v), min label of v's neighbors) to fixpoint, lineage
-    * truncated per round with localCheckpoint; only the frontier
-    * (labels that changed last round) propagates each round. */
-  def clustersDelta(s: SparkSession, d: String): DataFrame = {
-    val pairs = nearPairs(s, d).select(col("a_id"), col("b_id"))
-    val fwd = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
-    val rev = pairs.select(col("b_id").as("u"), col("a_id").as("v"))
-    val e = fwd.unionAll(rev).localCheckpoint()
-    var labels = Tables.documents(s, d)
-      .select(col("doc_id"), col("doc_id").as("l")).localCheckpoint()
+    * min(label(v), min label of v's neighbors) to fixpoint; only the
+    * frontier (labels that changed last round) propagates each round.
+    * Same contract as [[connectedComponentsStar]]: (doc_id, cluster_id
+    * = component minimum) for every node in `nodes`. */
+  def labelPropagation(nodes: DataFrame, pairs: DataFrame): DataFrame = {
+    val e = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
+      .unionAll(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
+      .localCheckpoint()
     // Delta iteration: only nodes whose label changed last round (the
-    // frontier) can lower a neighbor this round — an unchanged label's
-    // contribution was already absorbed. Round 1 runs the full edge
-    // set; later rounds touch only the frontier's edges, so the loop
-    // costs ~one full propagation regardless of round count.
-    var frontier = labels
-    var active = 1L
-    var iter = 0
-    try {
-      while (active > 0 && iter < 50) {
-        val neigh = e.join(frontier.select(col("doc_id").as("u"), col("l")), "u")
-          .groupBy(col("v")).agg(min(col("l")).as("nl"))
-        val next = labels.join(neigh, labels("doc_id") === neigh("v"), "left")
-          .select(col("doc_id"),
-            least(col("l"), coalesce(col("nl"), col("l"))).as("l"))
-          .localCheckpoint()
-        val newFrontier = next.join(labels.withColumnRenamed("l", "old"), "doc_id")
-          .filter(col("l") =!= col("old"))
-          .select(col("doc_id"), col("l")).localCheckpoint()
-        active = newFrontier.count()
-        // superseded checkpoint blocks are never read again — release
-        // them, or a long-lived session leaks block-manager storage per
-        // round per invocation
-        if (!(frontier eq labels)) frontier.unpersist(false)
-        labels.unpersist(false)
-        frontier = newFrontier
-        labels = next
-        iter += 1
-      }
-      require(active == 0, s"label propagation did not converge in $iter rounds")
-    } catch {
-      // the returned plan reads `labels`, so it stays cached on success;
-      // on failure nothing will read it — release it too
-      case t: Throwable => labels.unpersist(false); throw t
-    } finally {
-      if (!(frontier eq labels)) frontier.unpersist(false)
-      e.unpersist(false)
-    }
-    Skew.withGroupSize(labels, "l", "cluster_size")
-      .select(col("doc_id"), col("l").as("cluster_id"), col("cluster_size"),
-        (col("doc_id") === col("l")).as("is_keeper"))
-      .orderBy(col("doc_id").asc)
+    // frontier, `chg`) can lower a neighbor this round — an unchanged
+    // label's contribution was already absorbed. Round 1 runs the full
+    // edge set; later rounds touch only the frontier's edges, so the
+    // loop costs ~one full propagation regardless of round count.
+    val state0 = nodes
+      .select(col("doc_id"), col("doc_id").as("l"), lit(true).as("chg"))
+      .localCheckpoint()
+    val labels = Iterate.fixpoint(state0, "label propagation") { state =>
+      val neigh = e
+        .join(state.filter(col("chg")).select(col("doc_id").as("u"), col("l")), "u")
+        .groupBy(col("v")).agg(min(col("l")).as("nl"))
+      state.join(neigh, state("doc_id") === neigh("v"), "left")
+        .select(col("doc_id"),
+          least(col("l"), coalesce(col("nl"), col("l"))).as("l"),
+          coalesce(col("nl") < col("l"), lit(false)).as("chg"))
+    } { (_, next) => next.filter(col("chg")).isEmpty }
+    Iterate.release(e)
+    labels.select(col("doc_id"), col("l").as("cluster_id"))
   }
+
+  /** [[labelPropagation]] over the fixture-scale exact near-dup pairs,
+    * in the clusters-family shape — the spec's twin of [[clusters]]. */
+  def clustersDelta(s: SparkSession, d: String): DataFrame =
+    clusterShape(labelPropagation(Tables.documents(s, d).select(col("doc_id")),
+      nearPairs(s, d).select(col("a_id"), col("b_id"))))
 
   /** Alternating large-star/small-star connected components (Kiveris
     * et al., "Connected Components in MapReduce and Beyond") — the
@@ -1461,33 +1414,16 @@ object Dedup {
           greatest(col("x"), col("m")).as("v"))
         .distinct()
     }
-    // materialized once: hop and the contraction join both read it —
-    // without this the (expensive) pair pipeline runs twice. DISK_ONLY,
-    // not localCheckpoint: the raw edge set is the one corpus-scale
-    // intermediate here (205-219 M rows at sf1), and the default
-    // MEMORY_AND_DISK checkpoint pins it in executor heap — measured at
-    // sf1 that old-gen churn made LATER CC invocations in the same JVM
-    // degrade 23 s → 82-93 s (heap aging), and it is what forced the
-    // 48 GiB local-mode heap. On disk the per-pass cost is one
-    // serialize + two deserializes; the heap holds only stream buffers.
-    // (hop and the contracted skeleton stay heap-checkpointed — they
-    // are node-/skeleton-sized, and the loop needs their truncated
-    // lineage.)
-    val raw = pairs
+    // on disk, materialized once: hop and the contraction join both
+    // read it, and the raw edge set is the one corpus-scale
+    // intermediate here — the pair pipeline runs once per CC
+    // invocation. (hop and the contracted skeleton are
+    // heap-checkpointed — they are node-/skeleton-sized, and the loop
+    // needs their truncated lineage.)
+    val raw = Iterate.onDisk(pairs
       .select(least(col("a_id"), col("b_id")).as("u"),
         greatest(col("a_id"), col("b_id")).as("v"))
-      .filter(col("u") =!= col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    // Force the cache BEFORE bothDirs reads it: the union's two
-    // branches run as parallel map stages inside one job, and a lazy
-    // persist is populated per-partition as tasks complete — both
-    // branches raced past the empty cache and each re-ran the full
-    // pair pipeline (ProbeKey r17: two identical 12.6 s stages under
-    // the hop checkpoint at sf0.1). One count materializes the disk
-    // cache once; every later consumer (both hop branches + the
-    // contraction join) then reads spilled blocks, so the pair
-    // pipeline executes exactly once per CC invocation.
-    raw.count()
+      .filter(col("u") =!= col("v")))
     // Contraction pre-pass: hop every node to m(v) = min(Γ(v) ∪ v) —
     // one keyed aggregation over the edge list — and re-key the edges
     // through that label. Near-dup components are near-cliques, so
@@ -1504,37 +1440,25 @@ object Dedup {
     // no broadcast hint: the label map is materialized, so Catalyst
     // sees its true (node-sized) stats — auto-broadcast here, shuffle
     // join at cluster scale
-    var edges = raw
+    val edges0 = raw
       .join(hop.select(col("n").as("u"), col("m").as("mu")), "u")
       .join(hop.select(col("n").as("v"), col("m").as("mv")), "v")
       .select(least(col("mu"), col("mv")).as("u"),
         greatest(col("mu"), col("mv")).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct().localCheckpoint()
-    raw.unpersist(false) // both consumers are materialized above
-    var stable = false
-    var iter = 0
-    try {
-      while (!stable && iter < 50) {
-        val next = star(bothDirs(star(bothDirs(edges), large = true)),
-          large = false).localCheckpoint()
-        // one-job set equality: both sides are distinct canonical
-        // (u < v) pairs, so tagging each side ±1 and summing per pair
-        // leaves nonzero only where the sets differ — a single keyed
-        // aggregation instead of count + except jobs per round
-        stable = next.select(col("u"), col("v"), lit(1).as("side"))
-          .unionAll(edges.select(col("u"), col("v"), lit(-1).as("side")))
-          .groupBy(col("u"), col("v")).agg(sum(col("side")).as("t"))
-          .filter(col("t") =!= 0).isEmpty
-        edges.unpersist(false)
-        edges = next
-        iter += 1
-      }
-      require(stable, s"star iteration did not converge in $iter rounds")
-    } catch {
-      // the returned plan reads the final `edges` on success; on
-      // failure nothing will — release the current checkpoint too
-      case t: Throwable => edges.unpersist(false); throw t
+    Iterate.release(raw) // both consumers are materialized above
+    val edges = Iterate.fixpoint(edges0, "star iteration") { e =>
+      star(bothDirs(star(bothDirs(e), large = true)), large = false)
+    } { (prev, next) =>
+      // one-job set equality: both sides are distinct canonical
+      // (u < v) pairs, so tagging each side ±1 and summing per pair
+      // leaves nonzero only where the sets differ — a single keyed
+      // aggregation instead of count + except jobs per round
+      next.select(col("u"), col("v"), lit(1).as("side"))
+        .unionAll(prev.select(col("u"), col("v"), lit(-1).as("side")))
+        .groupBy(col("u"), col("v")).agg(sum(col("side")).as("t"))
+        .filter(col("t") =!= 0).isEmpty
     }
     // fixpoint is a star: every non-center node's single (canonical)
     // edge points at the center; groupBy-min is belt and braces.

@@ -525,42 +525,52 @@ object Vectors {
     * `c`, so sampled and full training share one geometry. */
   private[graft] def kmeansCentroids(c: DataFrame, rounds: Int,
       trainWhere: Option[Column] = None): DataFrame = {
-    var cents = initCentroids(c)
     val ct = trainWhere.fold(c)(tw =>
       c.crossJoin(broadcast(ncellsOf(c)))
         .filter(tw || col("vec_id") < col("ncells"))
         .drop("ncells"))
-    for (_ <- 1 to rounds) {
-      val members = withNearestCentroid(ct, cents, col("emb"), col("nrm"))
-        .select(col("cent_id"), col("emb"))
-      // Means stay in the posexplode → (cent, pos) agg → re-assembly
-      // shape. The r17 one-exchange alternative — groupBy(cent_id)
-      // with array(davg(emb[0]), …, davg(emb[63])) — is bit-identical
-      // but 128 aggregate buffers per group fall out of whole-stage
-      // codegen and TRIPLED every coarse-training key (measured:
-      // q_sim_ann_ivfpq 6.4 → 15.9 s, q_sim_kmeans 4.0 → 14.3 s);
-      // the exploded form keeps ONE narrow codegen'd decimal agg.
-      // (pqCodebook's PqDim=8-wide version of the same rewrite stays —
-      // 16 buffers is inside codegen limits and saves an exchange.)
-      val means = members
-        .select(col("cent_id"), posexplode(col("emb")).as(Seq("pos", "v")))
-        .groupBy(col("cent_id"), col("pos"))
-        .agg(Det.davg(col("v")).as("cv"))
-        .groupBy(col("cent_id"))
-        .agg(sort_array(collect_list(struct(col("pos"), col("cv")))).as("pe"))
-        .select(col("cent_id"), expr("transform(pe, e -> e.cv)").as("n_emb"))
-      cents = cents.join(means, Seq("cent_id"), "left")
-        .select(col("cent_id"),
-          coalesce(col("n_emb"), col("c_emb")).as("c_emb"))
-        .withColumn("c_nrm", sqrt(dot(col("c_emb"), col("c_emb"))))
-      // NO per-round checkpoint — measured r17: a LogicalRDD here (eager
-      // or lazy) loses `maxRows`/uniqueness facts, so Catalyst can no
-      // longer prune the training subtree out of consumers whose action
-      // doesn't need it (q_dedup_semantic 0.7 → 4.6-5.6 s), and the
-      // accumulated per-round blocks aged the whole suite's later
-      // passes. The nested rounds already share work via ReusedExchange.
+    (1 to rounds).foldLeft(initCentroids(c)) { (cents, _) =>
+      lloydStep(cents,
+        withNearestCentroid(ct, cents, col("emb"), col("nrm"))
+          .select(col("cent_id"), col("emb")),
+        Seq("cent_id"))
     }
-    cents
+  }
+
+  /** One Lloyd update of a coarse codebook, shared by
+    * [[kmeansCentroids]] (keyed by `cent_id`) and the split
+    * sub-training of [[storedIvfPqSplitIndex]] (keyed by
+    * `(pcell, cent_id)`): `members(keys…, emb)` are each member's
+    * assignment, and every centroid becomes the [[Det.davg]] mean of
+    * its members, or keeps its embedding if it has none.
+    *
+    * Means stay in the posexplode → (keys, pos) agg → re-assembly
+    * shape. The r17 one-exchange alternative — groupBy(keys) with
+    * array(davg(emb[0]), …, davg(emb[63])) — is bit-identical but 128
+    * aggregate buffers per group fall out of whole-stage codegen and
+    * TRIPLED every coarse-training key (measured: q_sim_ann_ivfpq 6.4 →
+    * 15.9 s, q_sim_kmeans 4.0 → 14.3 s); the exploded form keeps ONE
+    * narrow codegen'd decimal agg.
+    *
+    * NO per-round checkpoint — measured r17: a LogicalRDD here (eager
+    * or lazy) loses `maxRows`/uniqueness facts, so Catalyst can no
+    * longer prune the training subtree out of consumers whose action
+    * doesn't need it (q_dedup_semantic 0.7 → 4.6-5.6 s), and the
+    * accumulated per-round blocks aged the whole suite's later passes.
+    * The nested rounds already share work via ReusedExchange. */
+  private def lloydStep(cents: DataFrame, members: DataFrame,
+      keys: Seq[String]): DataFrame = {
+    val k = keys.map(col)
+    val means = members
+      .select(k :+ posexplode(col("emb")).as(Seq("pos", "v")): _*)
+      .groupBy(k :+ col("pos"): _*)
+      .agg(Det.davg(col("v")).as("cv"))
+      .groupBy(k: _*)
+      .agg(sort_array(collect_list(struct(col("pos"), col("cv")))).as("pe"))
+      .select(k :+ expr("transform(pe, e -> e.cv)").as("n_emb"): _*)
+    cents.join(means, keys, "left")
+      .select(k :+ coalesce(col("n_emb"), col("c_emb")).as("c_emb"): _*)
+      .withColumn("c_nrm", sqrt(dot(col("c_emb"), col("c_emb"))))
   }
 
   /** IVF search with an explicit codebook — shared by the declared
@@ -798,8 +808,11 @@ object Vectors {
     for (_ <- 1 to rounds) {
       val members = withPqCode(sv, cents)
         .select(col("j"), col("code").as("cent_id"), col("sv"))
-      // one (j, cent)-keyed aggregation per round — the
-      // [[kmeansCentroids]] single-shuffle means, PqDim-wide
+      // one (j, cent)-keyed aggregation per round, PqDim-wide — NOT
+      // [[lloydStep]]'s posexplode shape: r17 measured this single agg
+      // as the right one here (16 buffers stay inside whole-stage
+      // codegen and it saves an exchange; only the 64-wide form of
+      // the coarse trainers falls out of codegen)
       val means = members
         .groupBy(col("j"), col("cent_id"))
         .agg(array((0 until PqDim).map(p =>
@@ -807,7 +820,7 @@ object Vectors {
       cents = cents.join(means, Seq("j", "cent_id"), "left")
         .select(col("j"), col("cent_id"),
           coalesce(col("n_cv"), col("cv")).as("cv"))
-      // no per-round checkpoint — see kmeansCentroids (r17 note)
+      // no per-round checkpoint — see lloydStep (r17 note)
     }
     cents
   }
@@ -1599,31 +1612,16 @@ object Vectors {
         upstream = Seq(coarseDir, codesDir)) {
       val members = hotMembers(c, coarse, ccodes).localCheckpoint()
       val w = Window.partitionBy(col("pcell")).orderBy(col("vec_id").asc)
-      var sub = members.withColumn("srn", row_number().over(w))
+      val sub0 = members.withColumn("srn", row_number().over(w))
         .filter(col("srn") <= col("k_sub"))
         .select(col("pcell"), (col("srn") - 1).as("cent_id"),
           col("emb").as("c_emb"), col("nrm").as("c_nrm"))
-      for (_ <- 1 to SplitRounds) {
-        val asg = members.join(broadcast(subCbByCell(sub)), Seq("pcell"))
-          .withColumn("bc", bestCent(scoredCents(col("emb"), col("nrm"))))
-          .select(col("pcell"), col("bc.cent_id").as("cent_id"), col("emb"))
-        // posexplode means — see kmeansCentroids' r17 note (the 64-wide
-        // single-groupBy rewrite breaks codegen and is ~3× slower)
-        val means = asg
-          .select(col("pcell"), col("cent_id"),
-            posexplode(col("emb")).as(Seq("pos", "v")))
-          .groupBy(col("pcell"), col("cent_id"), col("pos"))
-          .agg(Det.davg(col("v")).as("cv"))
-          .groupBy(col("pcell"), col("cent_id"))
-          .agg(sort_array(collect_list(struct(col("pos"), col("cv"))))
-            .as("pe"))
-          .select(col("pcell"), col("cent_id"),
-            expr("transform(pe, e -> e.cv)").as("n_emb"))
-        sub = sub.join(means, Seq("pcell", "cent_id"), "left")
-          .select(col("pcell"), col("cent_id"),
-            coalesce(col("n_emb"), col("c_emb")).as("c_emb"))
-          .withColumn("c_nrm", sqrt(dot(col("c_emb"), col("c_emb"))))
-        // no per-round checkpoint — see kmeansCentroids (r17 note)
+      val sub = (1 to SplitRounds).foldLeft(sub0) { (book, _) =>
+        lloydStep(book,
+          members.join(broadcast(subCbByCell(book)), Seq("pcell"))
+            .withColumn("bc", bestCent(scoredCents(col("emb"), col("nrm"))))
+            .select(col("pcell"), col("bc.cent_id").as("cent_id"), col("emb")),
+          Seq("pcell", "cent_id"))
       }
       // children get parent-recoverable ids; untouched cells carry
       // their coarse centroid into the child book at parent·SplitBase
@@ -2342,7 +2340,7 @@ object Vectors {
        |ORDER BY probe_id ASC, rn ASC""".stripMargin
 
   /** IVF-PQ CTE chain shared by [[annIvfPq]]'s and
-    * [[annIvfPqRerank]]'s oracles: cell assignment, cell-tagged
+    * [[sqlAnnIvfPqRerank]]'s oracles: cell assignment, cell-tagged
     * codes, derived-nprobe probe cells, per-probe LUT, cell-pruned ADC sum,
     * per-probe rank — ends with `r(probe_id, vec_id, adist, rn)`.
     * Requires `c`/`cents`/`sv`/`cd`/`pq` from [[sqlCorpus]] +

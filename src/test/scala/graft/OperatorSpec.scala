@@ -1308,19 +1308,49 @@ class OperatorSpec extends AnyFunSuite {
       .exists(_.getAs[Double]("rank") > 0.15))
   }
 
-  test("pagerank: superseded round checkpoints are released") {
-    // only the final round's checkpoint may outlive the loop: the
-    // returned plan reads it, and nothing reads deg, the initial ranks,
-    // the earlier rounds or the edge cache again
+  test("graph loops: superseded round checkpoints are released") {
+    // only what a loop's returned plan reads may outlive the call:
+    // PageRank's final ranks, star CC's hop map and final edges,
+    // propagation's final labels. deg, the initial state, the earlier
+    // rounds and the edge caches are never read again. A GC can only
+    // shrink the map, so a leak cannot hide behind the collector.
     import spark.implicits._
     val nodes = spark.range(0, 12).select(col("id").as("doc_id"))
     val pairs = Seq((0L, 1L), (1L, 2L), (3L, 4L), (5L, 6L), (6L, 7L))
       .toDF("a_id", "b_id")
+    type DF = org.apache.spark.sql.DataFrame
+    val loops = Seq[(String, (DF, DF) => DF, Int)](
+      ("pagerankLoop", graft.ops.Dedup.pagerankLoop, 1),
+      ("connectedComponentsStar", graft.ops.Dedup.connectedComponentsStar, 2),
+      ("labelPropagation", graft.ops.Dedup.labelPropagation, 1))
+    loops.foreach { case (name, loop, kept) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val out = loop(nodes, pairs)
+      val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(added.size <= kept, s"$name: ${added.size} persistent RDDs left behind")
+      assert(out.count() == 12, name)
+    }
+  }
+
+  test("iterate: a capped or failing loop rethrows and releases its checkpoints") {
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val ranks = graft.ops.Dedup.pagerankLoop(nodes, pairs)
+    def one = spark.range(1).toDF().localCheckpoint()
+    val capped = intercept[IllegalStateException] {
+      graft.ops.Iterate.fixpoint(one, "probe loop")(df => df)((_, _) => false)
+    }
+    assert(capped.getMessage == "probe loop did not converge in 50 rounds")
+    val boom = new RuntimeException("round 2")
+    var round = 0
+    val thrown = intercept[RuntimeException] {
+      graft.ops.Iterate.rounds(one, 3) { df =>
+        round += 1
+        if (round == 2) throw boom
+        df
+      }
+    }
+    assert(thrown eq boom)
     val added = spark.sparkContext.getPersistentRDDs.keySet -- before
-    assert(added.size <= 1, s"${added.size} persistent RDDs left behind")
-    assert(ranks.count() == 12)
+    assert(added.isEmpty, s"${added.size} persistent RDDs left behind")
   }
 
   test("leakage-safe split: clusters pure, no verify pair crosses, doc split leaks") {
