@@ -28,6 +28,7 @@ import org.apache.spark.sql.types.LongType
   *    records its partition universe (`_CELLS`).
   */
 object Store {
+  import Stamp.listing
 
   /** A store family: which root it lives under (env var + built-in
     * default), which fixture table its content stamp is taken from, and
@@ -81,25 +82,8 @@ object Store {
   def dir(family: Family, d: String, kind: String): String = {
     swept
     s"${family.root}/t${d.replaceAll("[^A-Za-z0-9._-]", "_")}-$kind" +
-      family.token + fsStamp(s"$d/${family.source}.parquet")
+      family.token + Stamp(s"$d/${family.source}.parquet")
   }
-
-  /** Filesystem identity stamp of a fixture table — file names, sizes
-    * and mtimes folded through md5, from metadata alone (no data read,
-    * no Spark job). Regenerating the fixture changes the stamp, hence
-    * the store path, hence forces a rebuild. */
-  private def fsStamp(path: String): String = {
-    def walk(f: File): Seq[File] =
-      if (f.isDirectory) listing(f).sortBy(_.getName).flatMap(walk)
-      else Seq(f)
-    val sig = walk(new File(path))
-      .map(f => s"${f.getName}:${f.length}:${f.lastModified}").mkString(";")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(sig.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-  }
-
-  private def listing(f: File): Seq[File] =
-    Option(f.listFiles()).toSeq.flatten
 
   private def rm(f: File): Unit = {
     if (f.isDirectory) listing(f).foreach(rm)

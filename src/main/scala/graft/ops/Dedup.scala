@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Md5Prefix60.md5Prefix60
 import graft.Det
 import graft.io.{Store, Tables}
 
@@ -540,14 +541,15 @@ object Dedup {
     * md5(i || '|' || word), as a BIGINT. Fixed-width lowercase hex
     * orders identically to its numeric value, so min-of-int equals
     * min-of-string up to 15-hex-digit prefix ties, and DuckDB's
-    * CAST('0x'||prefix AS BIGINT) computes the identical integer.
+    * CAST('0x'||prefix AS BIGINT) computes the identical integer. The
+    * native [[org.apache.spark.sql.graft.Md5Prefix60]] kernel reads the
+    * prefix straight off the digest bytes (no hex string, no `conv`).
     * Why integers: the pair loop downstream compares 6M+ pairs x 64
     * elements; over array<string> that's ~2 KB of UTF8 copying per
     * pair (measured 77s at sf0.1), over primitive array<bigint> it is
     * a bare long-compare loop. */
   private def saltedHash(i: Int, word: Column): Column =
-    conv(substring(md5(concat(lit(s"$i|"), word).cast("binary")),
-      1, 15), 16, 10).cast("long")
+    md5Prefix60(concat(lit(s"$i|"), word))
 
   /** Salted, dictionary-free MinHash signatures — the 100 TB
     * formulation: h_i(doc) = min over the doc's token OCCURRENCES of
@@ -887,7 +889,8 @@ object Dedup {
       .unionAll(newDocs).distinct()
     // contracted-node → post-merge label (batch-sized CC); checkpointed
     // because both relabel joins read it
-    val mergedMap = connectedComponentsStar(touched, contracted)
+    val labels = connectedComponentsStar(touched, contracted)
+    val mergedMap = labels
       .select(col("doc_id").as("node"), col("cluster_id").as("new_l"))
       .localCheckpoint()
     // old docs: label-keyed relabel — untouched clusters miss the map
@@ -903,7 +906,11 @@ object Dedup {
       .join(mergedMap.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("new_l"), col("doc_id")).as("cluster_id"))
-    oldRelab.unionByName(newRelab)
+    val folded = oldRelab.unionByName(newRelab)
+    // the relabel joins read mergedMap only: contracted and star CC's
+    // hop and final edges are dead
+    Iterate.releaseSpent(labels, folded)
+    folded
   }
 
   /** Decorate bare `(doc_id, cluster_id)` labels with the
@@ -924,8 +931,9 @@ object Dedup {
     val newPairs = incrementalPairs(storedCorpusSigs(s, d), batch)
       .select(col("a_id"), col("b_id"))
     val newDocs = Tables.documents(s, d).select(col("doc_id")).filter(isNew)
-    clusterShape(
-      foldBatchLabels(storedOldClusterLabels(s, d), newDocs, newPairs))
+    val folded = foldBatchLabels(storedOldClusterLabels(s, d), newDocs, newPairs)
+    Iterate.release(batch) // only the fold's contracted pairs read it
+    clusterShape(folded)
   }
 
   // ───────────────────────── multi-day store evolution ─────────────
@@ -1060,10 +1068,10 @@ object Dedup {
       .localCheckpoint()
     val pairs = incrementalPairs(storedDay1Sigs(s, d), batch)
       .select(col("a_id"), col("b_id"))
-    clusterShape(
-      foldBatchLabels(storedDay1Labels(s, d),
-        Tables.documents(s, d).select(col("doc_id")).filter(resIs(Day2Res)),
-        pairs))
+    val folded = foldBatchLabels(storedDay1Labels(s, d),
+      Tables.documents(s, d).select(col("doc_id")).filter(resIs(Day2Res)), pairs)
+    Iterate.release(batch) // only the fold's contracted pairs read it
+    clusterShape(folded)
   }
 
   /** Day-2 signature store = day-1 store APPEND batch-9 signatures —
@@ -1145,6 +1153,7 @@ object Dedup {
       .join(touchedCl, Seq("cluster_id"), "left_semi")
       .select(col("doc_id"))
       .unionAll(batchDocs).distinct().localCheckpoint()
+    Iterate.release(newPairs) // only members' endpoints read it
     val subEdges = storedDay2Pairs(s, d).select(col("a_id"), col("b_id"))
       .join(members.withColumnRenamed("doc_id", "a_id"), Seq("a_id"), "left_semi")
     val subRanks = pagerankLoop(members, subEdges)

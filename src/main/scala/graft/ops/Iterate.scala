@@ -96,4 +96,15 @@ private[graft] object Iterate {
     case r: LogicalRDD => r.rdd.unpersist(blocking = false); ()
     case _ => df.unpersist(blocking = false); ()
   }
+
+  /** Free the checkpoints that `spent` reads and `live` does not: once
+    * a materialized frame has replaced `spent`, its `LogicalRDD`
+    * leaves are dead unless the returned plan `live` still reads them
+    * (a caller's checkpoint passed through, say). */
+  def releaseSpent(spent: DataFrame, live: DataFrame): Unit = {
+    def leaves(df: DataFrame) =
+      df.queryExecution.analyzed.collect { case r: LogicalRDD => r.rdd }
+    val kept = leaves(live).map(_.id).toSet
+    leaves(spent).filterNot(r => kept(r.id)).foreach(_.unpersist(blocking = false))
+  }
 }

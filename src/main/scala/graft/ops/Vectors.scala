@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Md5Prefix60.md5Prefix60
 import graft.Det
 import graft.io.{Store, Tables}
 
@@ -1673,9 +1674,7 @@ object Vectors {
         .filter(col("n_child") * col("ncells2") >
           lit(HotCellFactor) * col("n_total"))
         .select(col("newcell"), lit(true).as("over"))
-      val shardHash = pmod(expr(
-        "CAST(conv(substring(md5(CAST(CAST(vec_id AS STRING) AS BINARY))," +
-          "1,15),16,10) AS BIGINT)"), col("k_sub"))
+      val shardHash = pmod(md5Prefix60(col("vec_id").cast("string")), col("k_sub"))
       val newAsg = asg0.join(broadcast(over), Seq("newcell"), "left")
         .select(col("vec_id"),
           when(col("over"),

@@ -94,6 +94,41 @@ class FunctionsSpec extends AnyFunSuite {
     assert(r.passed, r.status.toString)
   }
 
+  test("Md5Prefix60 equals the conv(substring(md5(...))) chain (property)") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.graft.Md5Prefix60
+    import org.apache.spark.sql.types.{BinaryType, LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    // Dedup's salted hash: input row (salt prefix "i|", word)
+    val salted = Concat(Seq(BoundReference(0, StringType, nullable = false),
+      BoundReference(1, StringType, nullable = true)))
+    val chain = Cast(Conv(Substring(Md5(Cast(salted, BinaryType)), Literal(1), Literal(15)),
+      Literal(16), Literal(10)), LongType)
+    val kernel = Md5Prefix60(salted)
+    // compiled once; each case runs the generated code and both evals
+    val compiled = GenerateUnsafeProjection.generate(Seq(kernel, chain))
+    val word: Gen[String] = Gen.frequency(
+      1 -> Gen.const(""),
+      1 -> Gen.const(null),
+      3 -> Gen.alphaNumStr,
+      3 -> Gen.listOf(Gen.oneOf('é', 'ß', '日', '本', 'ж', '€', 'a')).map(_.mkString),
+      1 -> Gen.const("𝄞 clef"),
+      2 -> Gen.alphaStr.map(w => s"$w|$w|"))
+    val p = Prop.forAll(Gen.oneOf(0, 7, 63), word) { (i, w) =>
+      val row = InternalRow(UTF8String.fromString(s"$i|"), UTF8String.fromString(w))
+      val want = chain.eval(row)
+      val out = compiled(row)
+      val gen = if (out.isNullAt(0)) null else Long.box(out.getLong(0))
+      (w == null) == (want == null) && kernel.eval(row) == want && gen == want &&
+        out.isNullAt(1) == (want == null)
+    }
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), p)
+    assert(r.passed, r.status.toString)
+  }
+
   test("dot_product edge semantics match the fold: unequal=NULL, empty=0") {
     graft.functions.DotProduct.register(spark)
     val row = spark.sql(

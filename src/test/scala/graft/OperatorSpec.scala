@@ -1311,25 +1311,38 @@ class OperatorSpec extends AnyFunSuite {
   test("graph loops: superseded round checkpoints are released") {
     // only what a loop's returned plan reads may outlive the call:
     // PageRank's final ranks, star CC's hop map and final edges,
-    // propagation's final labels. deg, the initial state, the earlier
-    // rounds and the edge caches are never read again. A GC can only
-    // shrink the map, so a leak cannot hide behind the collector.
+    // propagation's final labels, the batch fold's merged label map.
+    // deg, the initial state, the earlier rounds, the edge caches and
+    // the fold's contracted graph with its star CC are never read
+    // again. A GC can only shrink the map, so a leak cannot hide
+    // behind the collector.
     import spark.implicits._
+    import graft.ops.Dedup
     val nodes = spark.range(0, 12).select(col("id").as("doc_id"))
     val pairs = Seq((0L, 1L), (1L, 2L), (3L, 4L), (5L, 6L), (6L, 7L))
       .toDF("a_id", "b_id")
+    // the same graph as a day chain: docs 0-7 hold their labels, 8-11
+    // arrive with pairs that join two old clusters' members and 9-10
+    val oldLabels = Seq((0L, 0L), (1L, 0L), (2L, 0L), (3L, 3L), (4L, 3L),
+      (5L, 5L), (6L, 5L), (7L, 5L)).toDF("doc_id", "cluster_id")
+    val newDocs = spark.range(8, 12).select(col("id").as("doc_id"))
+    val newPairs = Seq((2L, 8L), (4L, 9L), (9L, 10L)).toDF("a_id", "b_id")
     type DF = org.apache.spark.sql.DataFrame
-    val loops = Seq[(String, (DF, DF) => DF, Int)](
-      ("pagerankLoop", graft.ops.Dedup.pagerankLoop, 1),
-      ("connectedComponentsStar", graft.ops.Dedup.connectedComponentsStar, 2),
-      ("labelPropagation", graft.ops.Dedup.labelPropagation, 1))
+    val loops = Seq[(String, () => DF, Int)](
+      ("pagerankLoop", () => Dedup.pagerankLoop(nodes, pairs), 1),
+      ("connectedComponentsStar", () => Dedup.connectedComponentsStar(nodes, pairs), 2),
+      ("labelPropagation", () => Dedup.labelPropagation(nodes, pairs), 1),
+      ("foldBatchLabels", () => Dedup.foldBatchLabels(oldLabels, newDocs, newPairs), 1))
     loops.foreach { case (name, loop, kept) =>
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      val out = loop(nodes, pairs)
+      val out = loop()
       val added = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(added.size <= kept, s"$name: ${added.size} persistent RDDs left behind")
       assert(out.count() == 12, name)
     }
+    val folded = Dedup.foldBatchLabels(oldLabels, newDocs, newPairs)
+      .filter(col("doc_id") >= 8).as[(Long, Long)].collect().toMap
+    assert(folded == Map(8L -> 0L, 9L -> 3L, 10L -> 3L, 11L -> 11L))
   }
 
   test("iterate: a capped or failing loop rethrows and releases its checkpoints") {
